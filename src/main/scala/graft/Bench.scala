@@ -181,16 +181,18 @@ object Bench {
     val host = s"""{"load_start":$loadStart,"load_end":$loadEnd,""" +
       s""""probe_ms_start":$probeStart,"probe_ms_end":$probeEnd,""" +
       s""""cores":$cores}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","tables":$prov,"doc_chars":$docChars,"host":$host}"""
+    // one id per run, on both stdout lines and in the default artifact
+    // name: successive runs never overwrite each other's full line, and
+    // a compact line's `full_json` always points at its own run
+    val runId = s"${System.currentTimeMillis()}-${ProcessHandle.current.pid}"
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","run_id":"$runId","queries":$qs,"sf":"$sfDir","tables":$prov,"doc_chars":$docChars,"host":$host}"""
     println(line)
-    // stdout under sbt carries an `[info] ` prefix that breaks naive
-    // json.load on committed artifacts — SPARK_GRAFT_BENCH_OUT also
-    // lands the line as a CLEAN file, no post-processing needed. The
-    // full line ALWAYS lands at a stable path (env override or the
-    // tmpdir default) so a stdout-tail consumer can recover every key.
+    // the full line ALWAYS lands as a file too (SPARK_GRAFT_BENCH_OUT or
+    // a per-run tmpdir default) so a stdout-tail consumer can recover
+    // every key.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_full.json").getPath)
+        s"graft_bench_full_$runId.json").getPath)
     java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (line + "\n").getBytes("UTF-8"))
     // Round-15 measurement-contract fix (r14 VERDICT #2): the driver
@@ -201,9 +203,8 @@ object Bench {
     // final stdout line: same metric/value/unit/sf/host as the full
     // line, plus the SLOWEST query keys that fit a tail-safe byte
     // budget (regressions worth gating live in the heavy keys) and
-    // the path to the full artifact. The full line and its key set
-    // are UNCHANGED — this is an addition, and both lines come from
-    // the same measurement pass.
+    // the path to the full artifact. Both lines come from the same
+    // measurement pass.
     val byCost = (results ++ phaseResults).sortBy { case (_, v) => -v }
     val budget = 1400 // compact line stays < ~1800 B incl. the
     // envelope, so it + sbt's `[success]` trailer fit a 2000-char tail
@@ -211,16 +212,16 @@ object Bench {
       val r = math.rint(v * 1000) / 1000
       if (r == r.toLong) r.toLong + ".0" else r.toString
     }
-    val sb = new StringBuilder
-    var omitted = 0
-    byCost.foreach { case (k, v) =>
-      val ent = "\"" + k + "\":" + ms3(v)
-      if (sb.length + ent.length + 1 <= budget) {
-        if (sb.nonEmpty) sb.append(','); sb.append(ent)
-      } else omitted += 1
-    }
+    // strictly slowest-first: packing stops at the first entry that
+    // does not fit, so every printed key is slower than every omitted one
+    val ents = byCost.map { case (k, v) => "\"" + k + "\":" + ms3(v) }
+    var used = -1 // n entries take n - 1 commas
+    val kept = ents.takeWhile { e => used += e.length + 1; used <= budget }
+    val omitted = ents.size - kept.size
+    val packed = kept.mkString(",")
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":{$sb},"sf":"$sfDir","n_queries":${byCost.size},""" +
+      s""""run_id":"$runId",""" +
+      s""""queries":{$packed},"sf":"$sfDir","n_queries":${byCost.size},""" +
       s""""queries_omitted":$omitted,"full_json":"$fullPath",""" +
       s""""host":$host}""")
     spark.stop()

@@ -207,28 +207,44 @@ final class TimeSeriesService(
     * parquet built by ONE aggregation per rollup instead of per-event
     * upserts. Until invalidated by a write, [[getTimeseries]] serves
     * reads from these instead of raw events. */
-  def materializeRollups(baseDir: String): Seq[String] = {
-    val made = for {
+  def materializeRollups(baseDir: String): Seq[String] =
+    rollupTargets(baseDir).map { case (fact, grouping, slice, out) =>
+      materializeTarget(fact, grouping, slice, out)
+    }
+
+  /** Every rollup target the catalog implies — (fact × non-group_only
+    * dimension × grouping path), in catalog order — as (fact,
+    * grouping, slice minutes, store dir). The store dir is
+    * `<baseDir>/<name>` with the reference's `<path…>_<dim>_<fact>`
+    * name, passed through `stem` first (retention stamps it). */
+  private def rollupTargets(baseDir: String,
+      stem: String => String = identity)
+      : Seq[(FactDef, Seq[String], Int, String)] =
+    for {
       dim <- catalog.dimensions if !dim.groupOnly
       factId <- dim.facts.toSeq.sorted
       fact <- catalog.fact(factId).toSeq
       path <- dim.groupedBy
     } yield {
       val grouping = path :+ dim.id
-      val slice = dim.sliceMinutes.getOrElse(fact.sliceMinutes)
-      val out = s"$baseDir/${(path :+ dim.id :+ fact.id).mkString("_")}"
-      Rollups.materialize(prepare(fact.id, grouping), fact, slice, grouping, out)
-      // hierarchical day tier, coarsened FROM the slice store (one
-      // partial-merge aggregation — raw events are not re-read):
-      // calendar reads ≥ day with midnight bounds serve from it
-      val dayOut = s"${out}__day"
-      Rollups.materializeFactDayTier(Rollups.read(spark, out)
-        .drop("bucket_date"), fact, grouping, dayOut)
-      rollupStore((fact.id, grouping)) =
-        RollupReg(out, external = false, dayPath = Some(dayOut))
-      out
+      (fact, grouping, dim.sliceMinutes.getOrElse(fact.sliceMinutes),
+        s"$baseDir/${stem((grouping :+ fact.id).mkString("_"))}")
     }
-    made
+
+  /** Materialize one target's slice store at `out`, its day tier at
+    * `out__day`, and register both for serving. */
+  private def materializeTarget(fact: FactDef, grouping: Seq[String],
+      slice: Int, out: String): String = {
+    Rollups.materialize(prepare(fact.id, grouping), fact, slice, grouping, out)
+    // hierarchical day tier, coarsened FROM the slice store (one
+    // partial-merge aggregation — raw events are not re-read):
+    // calendar reads ≥ day with midnight bounds serve from it
+    val dayOut = s"${out}__day"
+    Rollups.materializeFactDayTier(Rollups.read(spark, out)
+      .drop("bucket_date"), fact, grouping, dayOut)
+    rollupStore((fact.id, grouping)) =
+      RollupReg(out, external = false, dayPath = Some(dayOut))
+    out
   }
 
   /** Re-attach a previously [[materializeRollups]]-written store after
@@ -253,23 +269,19 @@ final class TimeSeriesService(
     * @return the directories attached */
   def attachRollups(baseDir: String): Seq[String] = {
     val hconf = spark.sessionState.newHadoopConf()
-    val found = for {
-      dim <- catalog.dimensions if !dim.groupOnly
-      factId <- dim.facts.toSeq.sorted
-      fact <- catalog.fact(factId).toSeq
-      path <- dim.groupedBy
-      out = s"$baseDir/${(path :+ dim.id :+ fact.id).mkString("_")}"
-      p = new org.apache.hadoop.fs.Path(out)
-      if p.getFileSystem(hconf).exists(p)
-    } yield {
-      val dayOut = s"${out}__day"
-      val dp = new org.apache.hadoop.fs.Path(dayOut)
-      val hasDay = dp.getFileSystem(hconf).exists(dp)
-      rollupStore((fact.id, path :+ dim.id)) = RollupReg(out,
-        external = false, dayPath = if (hasDay) Some(dayOut) else None)
-      out
+    rollupTargets(baseDir).collect {
+      case (fact, grouping, _, out) if pathExists(hconf, out) =>
+        val dayOut = s"${out}__day"
+        rollupStore((fact.id, grouping)) = RollupReg(out, external = false,
+          dayPath = Some(dayOut).filter(pathExists(hconf, _)))
+        out
     }
-    found
+  }
+
+  private def pathExists(hconf: org.apache.hadoop.conf.Configuration,
+      dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(hconf).exists(p)
   }
 
   /** Incrementally refresh the materialized rollups for ONE time
@@ -291,24 +303,9 @@ final class TimeSeriesService(
     * materializeRollups). */
   def refreshRollups(baseDir: String, start: Timestamp,
       finish: Timestamp): Seq[String] = {
-    val targets = for {
-      dim <- catalog.dimensions if !dim.groupOnly
-      factId <- dim.facts.toSeq.sorted
-      fact <- catalog.fact(factId).toSeq
-      path <- dim.groupedBy
-    } yield {
-      val grouping = path :+ dim.id
-      val slice = dim.sliceMinutes.getOrElse(fact.sliceMinutes)
-      val out = s"$baseDir/${(path :+ dim.id :+ fact.id).mkString("_")}"
-      (fact, grouping, slice, out)
-    }
+    val targets = rollupTargets(baseDir)
     val hconf = spark.sessionState.newHadoopConf()
-    val missing = targets.collect {
-      case (_, _, _, out) if {
-        val p = new org.apache.hadoop.fs.Path(out)
-        !p.getFileSystem(hconf).exists(p)
-      } => out
-    }
+    val missing = targets.map(_._4).filterNot(pathExists(hconf, _))
     require(missing.isEmpty,
       "refreshRollups: no materialized rollup to refresh at " +
         s"${missing.mkString(", ")} — run materializeRollups first " +
@@ -319,8 +316,7 @@ final class TimeSeriesService(
       // keep the day tier in step (only the touched days re-coarsen);
       // stores materialized before the tier existed stay slice-only
       val dayOut = s"${out}__day"
-      val dayP = new org.apache.hadoop.fs.Path(dayOut)
-      val hasDay = dayP.getFileSystem(hconf).exists(dayP)
+      val hasDay = pathExists(hconf, dayOut)
       if (hasDay)
         Rollups.refreshDayTierWindow(spark, out, fact, grouping, dayOut,
           start, finish, slice)
@@ -465,17 +461,12 @@ final class TimeSeriesService(
   private def applyAdviceTo(baseDir: String, minCompactionE4: Long,
       keep: (String, Seq[String]) => Boolean)
       : Seq[TimeSeriesService.AdvisedRollup] = {
-    val targets = for {
-      dim <- catalog.dimensions if !dim.groupOnly
-      factId <- dim.facts.toSeq.sorted
-      fact <- catalog.fact(factId).toSeq
-      path <- dim.groupedBy
-      if keep(factId, path :+ dim.id)
-    } yield (fact, dim, path)
-    targets.groupBy { case (fact, dim, _) =>
-      (fact.id, dim.sliceMinutes.getOrElse(fact.sliceMinutes))
+    rollupTargets(baseDir).filter { case (fact, grouping, _, _) =>
+      keep(fact.id, grouping)
+    }.groupBy { case (fact, _, slice, _) =>
+      (fact.id, slice)
     }.toSeq.sortBy(_._1).flatMap { case ((factId, slice), group) =>
-      val groupings = group.map { case (_, dim, path) => path :+ dim.id }
+      val groupings = group.map(_._2)
       // advise once per distinct dimension SET (two dims can imply
       // set-equal groupings in different orders; the measured ratio is
       // order-independent, and adviseRollups rejects set-duplicates)
@@ -486,23 +477,15 @@ final class TimeSeriesService(
           candidates, sliceMinutes = slice)
         .collect()
         .map(r => r.getString(0) -> r.getLong(3)).toMap
-      group.map { case (fact, dim, path) =>
-        val grouping = path :+ dim.id
+      group.map { case (fact, grouping, _, out) =>
         val repr = bySet(grouping.toSet).head.mkString(",")
         // a target with zero scanned events has no advice row — it
         // compacts nothing, so it does not pay
         val ratio = advice.getOrElse(repr, 0L)
-        val made = if (ratio >= minCompactionE4) {
-          val out = s"$baseDir/${(path :+ dim.id :+ fact.id).mkString("_")}"
-          Rollups.materialize(prepare(fact.id, grouping), fact, slice,
-            grouping, out)
-          val dayOut = s"${out}__day"
-          Rollups.materializeFactDayTier(Rollups.read(spark, out)
-            .drop("bucket_date"), fact, grouping, dayOut)
-          rollupStore((fact.id, grouping)) =
-            RollupReg(out, external = false, dayPath = Some(dayOut))
-          Some(out)
-        } else None
+        val made =
+          if (ratio >= minCompactionE4)
+            Some(materializeTarget(fact, grouping, slice, out))
+          else None
         TimeSeriesService.AdvisedRollup(fact.id, grouping.mkString(","),
           ratio, made)
       }
@@ -1266,16 +1249,9 @@ final class TimeSeriesService(
     val utc = java.time.ZoneOffset.UTC
     val horizonDate = horizon.toInstant.atZone(utc).toLocalDate
     val cutoff = Timestamp.from(horizonDate.atStartOfDay(utc).toInstant)
-    val made = for {
-      dim <- catalog.dimensions if !dim.groupOnly
-      factId <- dim.facts.toSeq.sorted
-      fact <- catalog.fact(factId).toSeq
-      path <- dim.groupedBy
-    } yield {
-      val grouping = path :+ dim.id
-      val slice = dim.sliceMinutes.getOrElse(fact.sliceMinutes)
-      val out = s"$rollupBaseDir/retained_" +
-        s"${(path :+ dim.id :+ fact.id).mkString("_")}_$horizonDate"
+    val targets =
+      rollupTargets(rollupBaseDir, name => s"retained_${name}_$horizonDate")
+    val made = targets.map { case (fact, grouping, slice, out) =>
       val aged = Rollups.build(
         prepare(fact.id, grouping).where(col("ts") < lit(cutoff)),
         fact, slice, grouping)

@@ -16,38 +16,22 @@ object DocumentQueries {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 
-  /** text_source_profile_cached's cache dir, one per (session, sf dir). */
-  private val resultCacheDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   /** stream_manifest's maintained store: the corpus replayed as THREE
     * micro-batches (doc_id mod 3 split, mtime-ordered landing files),
     * so the read-side re-aggregation across `__batch_id=` dirs is
-    * genuinely exercised. Built once per (session, sf dir). */
-  private val streamManifestDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    * genuinely exercised. */
   private def streamedManifest(s: SparkSession, dir: String): String =
-    streamManifestDirs.getOrElseUpdate((s, dir), {
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
-      val base = Files.createTempDirectory("graft_streamman").toString
-      val landing = s"$base/landing"
-      Files.createDirectories(Paths.get(landing))
+    Artifacts.once(s, dir, "stream_manifest") {
+      val base = Artifacts.tempDir(s, "graft_streamman")
       val d = docs(s, dir)
       val t0 = System.currentTimeMillis()
       (0 until 3).foreach { i =>
-        val tmp = s"$base/tmp_$i"
-        d.where(pmod(col("doc_id"), lit(3)) === i).coalesce(1)
-          .write.parquet(tmp)
-        val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val dest = Paths.get(landing, s"f$i.parquet")
-        Files.move(Paths.get(part), dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(t0 + i * 60000L))
+        EventQueries.landFile(base,
+          d.where(pmod(col("doc_id"), lit(3)) === i), s"f$i", t0 + i * 60000L)
       }
       val manPath = s"$base/manifest"
       val stream = s.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1").parquet(landing)
+        .option("maxFilesPerTrigger", "1").parquet(s"$base/landing")
       val q = graft.streaming.StreamingIngest
         .maintainManifest(stream, "text", "source", manPath)
         .option("checkpointLocation", s"$base/ckpt")
@@ -55,17 +39,15 @@ object DocumentQueries {
         .start()
       q.awaitTermination()
       manPath
-    })
+    }
 
-  /** BPE training result shared by `bpe_merges` and `bpe_tokenize`,
-    * computed once per (session, corpus dir): the merge-table frame
-    * (collected — 12 rows) and the ordered (left, right) pairs the
-    * tokenizer consumes. Training is the artifact; serving reuses it. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Seq[(String, String)])]
+  /** BPE training result shared by `bpe_merges` and `bpe_tokenize`:
+    * the merge-table frame (collected — 12 rows) and the ordered
+    * (left, right) pairs the tokenizer consumes. Training is the
+    * artifact; serving reuses it. */
   private def trainedBpe(s: SparkSession, dir: String)
       : (DataFrame, Seq[(String, String)]) =
-    bpeCache.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "bpe") {
       // bpeTrain returns a DRIVER-LITERAL frame (merges.toSeq.toDF) —
       // cache it as-is, NEVER checkpointed: a localCheckpoint here
       // would tie the cached frame to persisted blocks that a later
@@ -76,35 +58,18 @@ object DocumentQueries {
       val pairs = m.orderBy(col("step"))
         .collect().map(r => (r.getString(1), r.getString(2))).toSeq
       (m, pairs)
-    })
+    }
 
-  /** Materialized near-dup pair list, computed once per (session,
-    * corpus dir) and persisted to parquet — the pipeline's deployment
-    * shape: pair generation is an ARTIFACT consumed by several
-    * downstream steps (cluster collapse, consensus), not recomputed
-    * per consumer. `legacy_dedup_ngram_jaccard` itself stays self-contained
-    * so the generator's full cost remains measured. Same bench-harness
-    * memoization caveats as EmbeddingQueries' index dirs (immutable sf
-    * dirs; JVM-exit cleanup). */
-  private val pairsDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val shardDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  /** BM25 postings store, built once per (session, corpus dir) — the
-    * deployment shape: the index is an offline ARTIFACT, queries are
-    * served from it with partition-pruned reads. Same bench-harness
-    * memoization caveats as [[pairsDirs]]. */
-  private val textIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  /** BM25 postings store — the deployment shape: the index is an
+    * offline ARTIFACT, queries are served from it with partition-pruned
+    * reads. */
   private def textIndexDir(s: SparkSession, dir: String): String =
-    textIndexDirs.getOrElseUpdate((s, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_bm25idx")
-      deleteOnExit(p)
+    Artifacts.once(s, dir, "bm25") {
+      val p = Artifacts.tempDir(s, "graft_bm25idx")
       TextAnalysis.buildTextIndex(docs(s, dir), "text", "doc_id",
-        p.toString, nBuckets = 64)
-      p.toString
-    })
+        p, nBuckets = 64)
+      p
+    }
 
   /** The erasure queries' deletion subjects: the sf0.01 rank-1 BM25
     * winners of the three standing queries — erasing them provably
@@ -117,27 +82,25 @@ object DocumentQueries {
     * `eraseFromTextIndex(erasedDocIds)`. Its own store — erasure on
     * the shared fixture would corrupt every other indexed query. */
   private def erasedTextIndexDir(s: SparkSession, dir: String): String =
-    textIndexDirs.getOrElseUpdate((s, s"$dir#erased"), {
-      val p = java.nio.file.Files.createTempDirectory("graft_bm25erase")
-      deleteOnExit(p)
+    Artifacts.once(s, dir, "bm25_erased") {
+      val p = Artifacts.tempDir(s, "graft_bm25erase")
       TextAnalysis.buildTextIndex(docs(s, dir), "text", "doc_id",
-        p.toString, nBuckets = 64)
-      TextAnalysis.eraseFromTextIndex(s, p.toString, erasedDocIds)
-      p.toString
-    })
+        p, nBuckets = 64)
+      TextAnalysis.eraseFromTextIndex(s, p, erasedDocIds)
+      p
+    }
 
   /** The erased index COMPACTED — the physical closer's output: no
     * tombstones, erased bytes gone. Must serve identically to the
     * tombstoned input (shared oracle). */
   private def erasedClosedTextIndexDir(s: SparkSession,
       dir: String): String =
-    textIndexDirs.getOrElseUpdate((s, s"$dir#erasedclosed"), {
+    Artifacts.once(s, dir, "bm25_erasedclosed") {
       val in = erasedTextIndexDir(s, dir)
-      val p = java.nio.file.Files.createTempDirectory("graft_bm25closed")
-      deleteOnExit(p)
-      TextAnalysis.compactTextIndex(s, in, p.toString)
-      p.toString
-    })
+      val p = Artifacts.tempDir(s, "graft_bm25closed")
+      TextAnalysis.compactTextIndex(s, in, p)
+      p
+    }
 
   /** An index whose deletion request arrived as a STREAM: built like
     * [[textIndexDir]], then the subjects consumed through
@@ -148,10 +111,8 @@ object DocumentQueries {
     * oracle would catch the stats drift. */
   private def streamErasedTextIndexDir(s: SparkSession,
       dir: String): String =
-    textIndexDirs.getOrElseUpdate((s, s"$dir#streamerased"), {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_bm25streamerase")
-      deleteOnExit(base)
+    Artifacts.once(s, dir, "bm25_streamerased") {
+      val base = Artifacts.tempDir(s, "graft_bm25streamerase")
       val idx = s"$base/index"
       TextAnalysis.buildTextIndex(docs(s, dir), "text", "doc_id",
         idx, nBuckets = 64)
@@ -174,23 +135,22 @@ object DocumentQueries {
       drain(s"$base/ckpt1")
       drain(s"$base/ckpt2") // the redelivery: must change nothing
       idx
-    })
+    }
 
   /** Two-batch index whose batches mirror `drift_sources`' split
     * (batch 0 = low-numbered sources, batch 1 = the rest) — lets the
     * index-derived drift query share the corpus-scan oracle. */
   private def splitTextIndexDir(s: SparkSession, dir: String): String =
-    textIndexDirs.getOrElseUpdate((s, s"$dir#split"), {
-      val p = java.nio.file.Files.createTempDirectory("graft_bm25split")
-      deleteOnExit(p)
+    Artifacts.once(s, dir, "bm25_split") {
+      val p = Artifacts.tempDir(s, "graft_bm25split")
       val d = docs(s, dir)
       val srcNum = substring(col("source"), 4, 10).cast("int")
       TextAnalysis.buildTextIndex(d.where(srcNum < 10), "text", "doc_id",
-        p.toString, nBuckets = 64)
+        p, nBuckets = 64)
       TextAnalysis.appendToTextIndex(d.where(srcNum >= 10), "text",
-        "doc_id", p.toString)
-      p.toString
-    })
+        "doc_id", p)
+      p
+    }
 
   /** STREAMING-maintained BM25 index: the documents table replayed as
     * a bounded file stream through
@@ -198,9 +158,8 @@ object DocumentQueries {
     * stats directories, zero streaming state. Served identically to
     * the batch-built index (and shares the scan-time oracle). */
   private def streamedTextIndexDir(s: SparkSession, dir: String): String =
-    textIndexDirs.getOrElseUpdate((s, s"$dir#stream"), {
-      val base = java.nio.file.Files.createTempDirectory("graft_bm25stream")
-      deleteOnExit(base)
+    Artifacts.once(s, dir, "bm25_stream") {
+      val base = Artifacts.tempDir(s, "graft_bm25stream")
       val idx = s"$base/index"
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema)
@@ -214,21 +173,17 @@ object DocumentQueries {
         .start()
       q.awaitTermination()
       idx
-    })
+    }
 
-  /** Streaming scrub output, built once per (session, sf dir): the
-    * documents table replayed as a bounded file stream through the
-    * ROW-LOCAL scrub chain (augment → normalize → PII count/redact) —
-    * all plain column algebra, so the same operators run under
-    * Structured Streaming with an append sink, no state, no
-    * watermark. The twin proves the text plane's scrub stage deploys
-    * as a continuous pipeline verbatim. */
-  private val streamScrubDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  /** Streaming scrub output: the documents table replayed as a bounded
+    * file stream through the ROW-LOCAL scrub chain (augment →
+    * normalize → PII count/redact) — all plain column algebra, so the
+    * same operators run under Structured Streaming with an append
+    * sink, no state, no watermark. The twin proves the text plane's
+    * scrub stage deploys as a continuous pipeline verbatim. */
   private def streamedScrub(s: SparkSession, dir: String): String =
-    streamScrubDirs.getOrElseUpdate((s, dir), {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_streamscrub").toString
+    Artifacts.once(s, dir, "stream_scrub") {
+      val base = Artifacts.tempDir(s, "graft_streamscrub")
       val out = s"$base/out"
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema)
@@ -249,16 +204,14 @@ object DocumentQueries {
         .start()
       q.awaitTermination()
       out
-    })
-  private val streamDeconDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    }
+
   /** Replay documents.parquet as a file stream of TRAINING docs
-    * (doc_id % 25 ≠ 0) through the streaming decontamination pipeline
-    * once per (session, sf dir); returns the per-batch report store. */
+    * (doc_id % 25 ≠ 0) through the streaming decontamination
+    * pipeline; returns the per-batch report store. */
   private def streamedDecon(s: SparkSession, dir: String): String =
-    streamDeconDirs.getOrElseUpdate((s, dir), {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_streamdecon").toString
+    Artifacts.once(s, dir, "stream_decon") {
+      val base = Artifacts.tempDir(s, "graft_streamdecon")
       val out = s"$base/out"
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(schema)
@@ -274,31 +227,22 @@ object DocumentQueries {
         .start()
       q.awaitTermination()
       out
-    })
+    }
 
-  private val jsonlDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val orcDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  private def deleteOnExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch { case _: Throwable => () }))
-
+  /** Materialized near-dup pair list, persisted to parquet — the
+    * pipeline's deployment shape: pair generation is an ARTIFACT
+    * consumed by several downstream steps (cluster collapse,
+    * consensus), not recomputed per consumer.
+    * `legacy_dedup_ngram_jaccard` itself stays self-contained so the
+    * generator's full cost remains measured. */
   private def jaccardPairsArtifact(s: SparkSession, dir: String): DataFrame = {
-    val path = pairsDirs.getOrElseUpdate((s, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_jpairs")
-      deleteOnExit(p)
+    val path = Artifacts.once(s, dir, "jaccard_pairs") {
+      val p = Artifacts.tempDir(s, "graft_jpairs")
       Dedup.jaccardPairsPostingKernel(docs(s, dir), "text", "doc_id",
         k = 3, thresholdE4 = 5000)
-        .write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
+        .write.mode("overwrite").parquet(p)
+      p
+    }
     s.read.parquet(path)
   }
 
@@ -1223,8 +1167,8 @@ object DocumentQueries {
     // manifest scan, not a recompute, and serving must be
     // answer-invisible (same oracle as the uncached twin)
     "text_source_profile_cached" -> ((s, dir) => {
-      val cacheDir = resultCacheDirs.getOrElseUpdate((s, dir),
-        java.nio.file.Files.createTempDirectory("graft_rescache").toString)
+      val cacheDir = Artifacts.once(s, dir, "result_cache")(
+        Artifacts.tempDir(s, "graft_rescache"))
       graft.sources.ResultCache.serveOrCompute(s, cacheDir,
         graft.operators.Dedup.contentManifest(docs(s, dir), "text",
           "source")) {
@@ -1540,13 +1484,11 @@ object DocumentQueries {
     // seeded md5, so writer routing must preserve every row exactly
     "shard_profile" -> ((s, dir) => {
       import graft.sources.CorpusSink
-      val out = shardDirs.getOrElseUpdate((s, dir), {
-        val p = java.nio.file.Files.createTempDirectory("graft_shards")
-        deleteOnExit(p)
-        CorpusSink.writeSharded(docs(s, dir), "doc_id", p.toString,
-          nShards = 16)
-        p.toString
-      })
+      val out = Artifacts.once(s, dir, "shards") {
+        val p = Artifacts.tempDir(s, "graft_shards")
+        CorpusSink.writeSharded(docs(s, dir), "doc_id", p, nShards = 16)
+        p
+      }
       CorpusSink.readSharded(s, out)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1580,12 +1522,11 @@ object DocumentQueries {
     "docs_jsonl_roundtrip" -> ((s, dir) => {
       import graft.sources.CorpusSink
       val d = docs(s, dir)
-      val p = jsonlDirs.getOrElseUpdate((s, dir), {
-        val t = java.nio.file.Files.createTempDirectory("graft_jsonl")
-        deleteOnExit(t)
-        CorpusSink.writeJsonl(d, t.toString)
-        t.toString
-      })
+      val p = Artifacts.once(s, dir, "jsonl") {
+        val t = Artifacts.tempDir(s, "graft_jsonl")
+        CorpusSink.writeJsonl(d, t)
+        t
+      }
       CorpusSink.readJsonl(s, p, d.schema)
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1602,12 +1543,11 @@ object DocumentQueries {
     "docs_orc_roundtrip" -> ((s, dir) => {
       import graft.sources.CorpusSink
       val d = docs(s, dir)
-      val p = orcDirs.getOrElseUpdate((s, dir), {
-        val t = java.nio.file.Files.createTempDirectory("graft_orc")
-        deleteOnExit(t)
-        CorpusSink.writeOrc(d, t.toString)
-        t.toString
-      })
+      val p = Artifacts.once(s, dir, "orc") {
+        val t = Artifacts.tempDir(s, "graft_orc")
+        CorpusSink.writeOrc(d, t)
+        t
+      }
       CorpusSink.readOrc(s, p, d.schema)
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"),

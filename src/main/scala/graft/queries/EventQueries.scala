@@ -140,102 +140,86 @@ object EventQueries {
     events(s, dir).withColumn("value", cents)
 
   /** Materialize + register the slice partials for [[routedRaw]] once
-    * per (session, sf dir) — queries then measure the ROUTED read path,
-    * the deployment shape where the rollup already exists. */
-  private val routedDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def ensureRouted(s: SparkSession, dir: String): Unit =
-    routedDirs.getOrElseUpdate((s, dir), {
+    * — queries then measure the ROUTED read path, the deployment shape
+    * where the rollup already exists. Returns the partials dir. */
+  private def ensureRouted(s: SparkSession, dir: String): String =
+    Artifacts.once(s, dir, "routed") {
       import graft.operators.Rollups
       import graft.plans.RollupRouting
-      val out = java.nio.file.Files.createTempDirectory("graft_partials").toString
+      val out = Artifacts.tempDir(s, "graft_partials")
       Rollups.materializePartials(routedRaw(s, dir), Seq("event_type"), out)
       RollupRouting.install(s)
       RollupRouting.register(s, routedRaw(s, dir), Rollups.read(s, out),
         Seq("event_type"))
       out
-    })
+    }
 
-  /** Distinct tall partials for the routing rule, registered once per
-    * (session, sf dir): COUNT(DISTINCT user_id) aggregates over the
-    * raw events route onto them transparently. Built with
+  /** Distinct tall partials for the routing rule, registered once:
+    * COUNT(DISTINCT user_id) aggregates over the raw events route onto
+    * them transparently. Built with
     * [[Rollups.distinctPartials]] (NOT the service write path's
     * [[Rollups.materialize]]): the rule rewrites arbitrary user SQL
     * whose GROUP BY keeps null-dimension groups, so the registered
     * store must keep them too — the service path's null-skip matches
     * the reference's `event-key` write semantics but would silently
     * drop the NULL event_type group from a routed plan. */
-  private val routedDistinctDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def ensureRoutedDistinct(s: SparkSession, dir: String): Unit =
-    routedDistinctDirs.getOrElseUpdate((s, dir), {
+  private def ensureRoutedDistinct(s: SparkSession, dir: String): String =
+    Artifacts.once(s, dir, "routed_distinct") {
       import graft.operators.Rollups
       import graft.plans.RollupRouting
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_dpartials").toString
+      val out = Artifacts.tempDir(s, "graft_dpartials")
       Rollups.materializeDistinctPartials(events(s, dir),
         Seq("event_type"), out, valueCol = "user_id")
       RollupRouting.install(s)
       RollupRouting.registerDistinct(s, events(s, dir),
         Rollups.read(s, out), Seq("event_type"), valueCol = "user_id")
       out
-    })
+    }
 
   /** Day-grain DISTINCT tier over [[ensureRoutedDistinct]]'s tall
-    * partials, built and registered once per (session, sf dir): with
-    * both distinct tiers live, day+ COUNT DISTINCT queries serve from
-    * one row per (dims, day, value). */
-  private val routedDistinctDayDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    * partials, built and registered once: with both distinct tiers
+    * live, day+ COUNT DISTINCT queries serve from one row per (dims,
+    * day, value). */
   private def ensureRoutedDistinctDay(s: SparkSession, dir: String): Unit = {
-    ensureRoutedDistinct(s, dir)
-    routedDistinctDayDirs.getOrElseUpdate((s, dir), {
+    val partials = ensureRoutedDistinct(s, dir)
+    Artifacts.once(s, dir, "routed_distinct_day") {
       import graft.operators.Rollups
       import graft.plans.RollupRouting
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_ddaypartials").toString
-      Rollups.materializeDistinctDayPartials(
-        Rollups.read(s, routedDistinctDirs((s, dir))), out)
+      val out = Artifacts.tempDir(s, "graft_ddaypartials")
+      Rollups.materializeDistinctDayPartials(Rollups.read(s, partials), out)
       RollupRouting.registerDistinctDayGrain(s, events(s, dir),
         Rollups.read(s, out), Seq("event_type"), valueCol = "user_id")
       out
-    })
+    }
     ()
   }
 
   /** Day-grain tier over [[ensureRouted]]'s slice partials, built and
-    * registered once per (session, sf dir): with both tiers live, the
-    * rule serves day+ queries from ~96× fewer rows. */
-  private val routedDayDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    * registered once: with both tiers live, the rule serves day+
+    * queries from ~96× fewer rows. */
   private def ensureRoutedDay(s: SparkSession, dir: String): Unit = {
-    ensureRouted(s, dir)
-    routedDayDirs.getOrElseUpdate((s, dir), {
+    val partials = ensureRouted(s, dir)
+    Artifacts.once(s, dir, "routed_day") {
       import graft.operators.Rollups
       import graft.plans.RollupRouting
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_daypartials").toString
-      Rollups.materializeDayPartials(
-        Rollups.read(s, routedDirs((s, dir))), out)
+      val out = Artifacts.tempDir(s, "graft_daypartials")
+      Rollups.materializeDayPartials(Rollups.read(s, partials), out)
       RollupRouting.registerDayGrain(s, routedRaw(s, dir),
         Rollups.read(s, out), Seq("event_type"))
       out
-    })
+    }
     ()
   }
 
-  /** Histogram tall partials for the routing rule, registered once per
-    * (session, sf dir): `count(*) GROUP BY histBucket(value)` plans
-    * over the raw events route onto (hist_bucket, count) partials —
-    * built null-KEEPING like the distinct registration. */
-  private val routedHistDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def ensureRoutedHist(s: SparkSession, dir: String): Unit =
-    routedHistDirs.getOrElseUpdate((s, dir), {
+  /** Histogram tall partials for the routing rule, registered once:
+    * `count(*) GROUP BY histBucket(value)` plans over the raw events
+    * route onto (hist_bucket, count) partials — built null-KEEPING
+    * like the distinct registration. */
+  private def ensureRoutedHist(s: SparkSession, dir: String): String =
+    Artifacts.once(s, dir, "routed_hist") {
       import graft.operators.{Rollups, Timeseries}
       import graft.plans.RollupRouting
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_hpartials").toString
+      val out = Artifacts.tempDir(s, "graft_hpartials")
       Rollups.materializeHistogramPartials(events(s, dir),
         Seq("event_type"), Timeseries.histBucket(histFact), out)
       RollupRouting.install(s)
@@ -243,7 +227,7 @@ object EventQueries {
         Rollups.read(s, out), Seq("event_type"),
         Timeseries.histBucket(histFact))
       out
-    })
+    }
 
   /** The scan's inclusive-bucket upper bound, for oracle parity:
     * ts < slice(finish) + slice. */
@@ -272,8 +256,7 @@ object EventQueries {
     val build = () => {
       svc.defineFact("events_count", FactType.Counter, slice = 15)
       svc.defineDimension("event_type", facts = Set("events_count"))
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_asof").toString + "/store"
+      val store = Artifacts.tempDir(s, "graft_asof") + "/store"
       svc.attachEventStore(store)
       val ev = eventsRanged(s, dir, "2024-01-05T00:00", "2024-01-07T00:00")
       (0 to 2).foreach { b =>
@@ -315,8 +298,7 @@ object EventQueries {
       svc.ingest(lifecycleDay(s, dir, 5, withUserBucket = false))
       svc.ingest(lifecycleDay(s, dir, 6, withUserBucket = false))
       svc.ingest(lifecycleDay(s, dir, 7, withUserBucket = false))
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_retain").toString
+      val base = Artifacts.tempDir(s, "graft_retain")
       svc.expireEvents(ts("2024-01-07T00:00"), base)
       ()
     }
@@ -336,8 +318,7 @@ object EventQueries {
       svc.ingest(lifecycleDay(s, dir, 5, withUserBucket = true))
       svc.ingest(lifecycleDay(s, dir, 6, withUserBucket = true))
       svc.ingest(lifecycleDay(s, dir, 7, withUserBucket = true))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_erase").toString
+      val out = Artifacts.tempDir(s, "graft_erase")
       svc.eraseEvents(
         element_at(col("categories"), "user_bucket") === "3", out)
       ()
@@ -375,8 +356,7 @@ object EventQueries {
           map(lit("user_bucket"),
             (col("user_id") % 4).cast("string")).as("categories"))
       svc.ingest(ev)
-      svc.materializeRollups(java.nio.file.Files
-        .createTempDirectory("graft_multi_mv").toString)
+      svc.materializeRollups(Artifacts.tempDir(s, "graft_multi_mv"))
       ()
     }
     val read = () => svc.getTimeseriesMulti(
@@ -410,8 +390,7 @@ object EventQueries {
           map(lit("user_bucket"),
             (col("user_id") % 4).cast("string")).as("categories"))
       svc.ingest(ev)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_route_explain").toString
+      val tmp = Artifacts.tempDir(s, "graft_route_explain")
       svc.materializeRollups(tmp)
       svc.registerRollup("purchases_count", Seq("user_bucket"),
         s"$tmp/user_bucket_purchases_count")
@@ -448,8 +427,7 @@ object EventQueries {
         .select(lit("events_count").as("fact"), col("ts"),
           lit(1L).as("value"),
           map(lit("event_type"), col("event_type")).as("categories")))
-      svc.materializeRollups(java.nio.file.Files
-        .createTempDirectory("graft_winday").toString)
+      svc.materializeRollups(Artifacts.tempDir(s, "graft_winday"))
       graft.sql.PipelineViews.installTimeseriesWindow(s, svc,
         "events_count", "event_type", Map("event_type" -> Some("click")),
         Step.Day, name = "graft_timeseries_window_day")
@@ -775,8 +753,7 @@ object EventQueries {
           when(col("event_id") % 7 === 0, lit(null).cast(LongType))
             .otherwise(lit(1L)).as("value"),
           map(lit("event_type"), col("event_type")).as("categories"))
-      val qdir = java.nio.file.Files
-        .createTempDirectory("graft_quarantine").toString + "/bad"
+      val qdir = Artifacts.tempDir(s, "graft_quarantine") + "/bad"
       svc.ingestLenient(frame, qdir)
       svc.getTimeseries("events_count", "event_type",
         Map("event_type" -> Some("click")),
@@ -1047,8 +1024,7 @@ object EventQueries {
       // ~18×, clearing any bar) — 1.5× is this dashboard's declared
       // "worth the storage" line, and the requires pin that BOTH
       // verdicts were genuine measurements, not bypasses
-      val advised = svc.applyAdvice(java.nio.file.Files
-        .createTempDirectory("graft_advice").toString,
+      val advised = svc.applyAdvice(Artifacts.tempDir(s, "graft_advice"),
         minCompactionE4 = 15000L)
       require(advised.nonEmpty && advised.forall(_.path.isDefined),
         s"both dashboard groupings must pay at this fixture: $advised")
@@ -1093,9 +1069,8 @@ object EventQueries {
         "user_bucket", Map("user_bucket" -> None), win._1, win._2,
         Step.Day)
       readHot(); readHot()
-      val advised = svc.applyAdviceFromWorkload(java.nio.file.Files
-          .createTempDirectory("graft_wl_advice").toString,
-        minReads = 2L, minCompactionE4 = 15000L)
+      val advised = svc.applyAdviceFromWorkload(
+        Artifacts.tempDir(s, "graft_wl_advice"), minReads = 2L, minCompactionE4 = 15000L)
       require(advised.map(_.grouping) == Seq("user_bucket") &&
         advised.forall(_.path.isDefined),
         s"exactly the hot grouping must materialize, got $advised")
@@ -1117,13 +1092,12 @@ object EventQueries {
     // from the PRIOR session's observed reads (it has served nothing
     // itself — required in-query), then serves once from the rollup
     // and checkpoints; session 3 attaches and returns the
-    // accumulated two-session history. The in-memory TrieMap dies
+    // accumulated two-session history. The in-memory read log dies
     // with every instance here — only the parquet log carries the
     // counts forward, which is exactly what the oracle gates.
     "ts_workload_persisted" -> ((s, dir) => {
       import graft.TimeSeriesService
-      val logDir = java.nio.file.Files
-        .createTempDirectory("graft_wl_log").toString + "/log"
+      val logDir = Artifacts.tempDir(s, "graft_wl_log") + "/log"
       val win = (ts("2024-01-05T00:00"), ts("2024-01-07T00:00"))
       def freshService(): TimeSeriesService = {
         val svc = new TimeSeriesService(s)
@@ -1146,9 +1120,8 @@ object EventQueries {
       readHot(svc1); readHot(svc1)
       svc1.checkpointWorkloadLog()
       val svc2 = freshService()
-      val advised = svc2.applyAdviceFromWorkload(java.nio.file.Files
-          .createTempDirectory("graft_wl_persist_mv").toString,
-        minReads = 2L, minCompactionE4 = 15000L)
+      val advised = svc2.applyAdviceFromWorkload(
+        Artifacts.tempDir(s, "graft_wl_persist_mv"), minReads = 2L, minCompactionE4 = 15000L)
       require(advised.map(_.grouping) == Seq("user_bucket") &&
         advised.forall(_.path.isDefined),
         s"the prior session's logged reads must drive the " +
@@ -1585,15 +1558,15 @@ object EventQueries {
     // as ts_counter_hour_fill
     "events_csv_roundtrip" -> ((s, dir) => {
       import graft.sources.EventSource
-      val csvPath = csvDirs.getOrElseUpdate((s, dir), {
-        val p = java.nio.file.Files.createTempDirectory("graft_evcsv").toString
+      val csvPath = Artifacts.once(s, dir, "events_csv") {
+        val p = Artifacts.tempDir(s, "graft_evcsv")
         EventSource.writeCsv(
           EventSource.fromWide(
             eventsRanged(s, dir, "2024-01-05T00:00", "2024-01-07T00:00"),
             "events_count", col("ts"), lit(1L),
             Map("event_type" -> col("event_type"))), p)
         p
-      })
+      }
       val prepared = EventSource.csv(s, csvPath)
         .where(col("fact") === "events_count")
         .select(col("categories").getItem("event_type").as("event_type"),
@@ -1608,15 +1581,15 @@ object EventQueries {
     // must match the same raw-parquet oracle
     "events_json_roundtrip" -> ((s, dir) => {
       import graft.sources.EventSource
-      val jsonPath = jsonDirs.getOrElseUpdate((s, dir), {
-        val p = java.nio.file.Files.createTempDirectory("graft_evjson").toString
+      val jsonPath = Artifacts.once(s, dir, "events_json") {
+        val p = Artifacts.tempDir(s, "graft_evjson")
         EventSource.writeJson(
           EventSource.fromWide(
             eventsRanged(s, dir, "2024-01-05T00:00", "2024-01-07T00:00"),
             "events_count", col("ts"), lit(1L),
             Map("event_type" -> col("event_type"))), p)
         p
-      })
+      }
       val prepared = EventSource.json(s, jsonPath)
         .where(col("fact") === "events_count")
         .select(col("categories").getItem("event_type").as("event_type"),
@@ -2875,14 +2848,7 @@ object EventQueries {
     // corrupted row IS flagged)
     "rollup_audit" -> ((s, dir) => {
       import graft.operators.Rollups
-      val out = rollupDirs.getOrElseUpdate((s, dir), {
-        val d = java.nio.file.Files.createTempDirectory("graft_rollup").toString
-        Rollups.materialize(
-          prep(s, dir, withUser = false, one,
-            Some(("2024-01-05T00:00", "2024-01-07T00:00"))),
-          countFact, 15, Seq("event_type"), d)
-        d
-      })
+      val out = rollupDir(s, dir)
       Rollups.audit(Rollups.read(s, out),
         prep(s, dir, withUser = false, one,
           Some(("2024-01-05T00:00", "2024-01-07T00:00"))),
@@ -2891,39 +2857,25 @@ object EventQueries {
 
     "ts_rollup_hour_fill" -> ((s, dir) => {
       import graft.operators.Rollups
-      val out = rollupDirs.getOrElseUpdate((s, dir), {
-        val d = java.nio.file.Files.createTempDirectory("graft_rollup").toString
-        Rollups.materialize(
-          prep(s, dir, withUser = false, one,
-            Some(("2024-01-05T00:00", "2024-01-07T00:00"))),
-          countFact, 15, Seq("event_type"), d)
-        d
-      })
+      val out = rollupDir(s, dir)
       Rollups.run(Rollups.read(s, out), countFact, 15,
         Seq("event_type"), Map("event_type" -> Some("click")),
         ts("2024-01-05T00:00"), ts("2024-01-07T00:00"), Step.Hour)
     }))
 
-  /** ts_rollup_hour_fill's materialized partials, built once per
-    * (session, sf dir): repeated runs measure the rollup READ path (the
+  /** ts_rollup_hour_fill's and rollup_audit's materialized partials,
+    * built once: repeated runs measure the rollup READ path (the
     * deployment shape), not a rebuild per query. */
-  private val rollupDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  /** events_csv_roundtrip's CSV copy of the ranged events, written once
-    * per (session, sf dir). */
-  private val csvDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  /** events_json_roundtrip's JSON copy, same lifecycle as [[csvDirs]]. */
-  private val jsonDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  /** ts_stream_maintained_fill's streaming-maintained rollup, built
-    * once per (session, sf dir) by replaying the events parquet as a
-    * bounded file stream. */
-  private val streamRollupDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private def rollupDir(s: SparkSession, dir: String): String =
+    Artifacts.once(s, dir, "rollup") {
+      import graft.operators.Rollups
+      val d = Artifacts.tempDir(s, "graft_rollup")
+      Rollups.materialize(
+        prep(s, dir, withUser = false, one,
+          Some(("2024-01-05T00:00", "2024-01-07T00:00"))),
+        countFact, 15, Seq("event_type"), d)
+      d
+    }
 
   /** Replay the sf events through
     * [[graft.streaming.StreamingIngest.maintainRollup]] (file-source
@@ -2941,10 +2893,9 @@ object EventQueries {
 
   private def streamedRollupFor(s: SparkSession, dir: String,
       fact: FactDef, value: Column): String =
-    streamRollupDirs.getOrElseUpdate((s, s"$dir#${fact.id}"), {
+    Artifacts.once(s, dir, s"stream_rollup_${fact.id}") {
       import graft.streaming.StreamingIngest
-      val base = java.nio.file.Files.createTempDirectory("graft_streamroll")
-        .toString
+      val base = Artifacts.tempDir(s, "graft_streamroll")
       val rollPath = s"$base/rollup"
       // nanos-adaptive schema resolution without mutating the session
       // conf; the stream itself stays on the caller's session
@@ -2969,17 +2920,16 @@ object EventQueries {
         .start()
       q.awaitTermination()
       rollPath
-    })
+    }
 
   /** The streaming-maintained APPROXIMATE-distinct store: same
     * file-stream replay, per-batch HLL sketch partials instead of
     * exact tall partials ([[graft.streaming.StreamingIngest
     * .maintainSketchRollup]]). */
   private def maintainedSketchRollup(s: SparkSession, dir: String): String =
-    streamRollupDirs.getOrElseUpdate((s, s"$dir#sketch"), {
+    Artifacts.once(s, dir, "stream_sketch") {
       import graft.streaming.StreamingIngest
-      val base = java.nio.file.Files.createTempDirectory("graft_streamsk")
-        .toString
+      val base = Artifacts.tempDir(s, "graft_streamsk")
       val rollPath = s"$base/rollup"
       val schema = graft.sources.EventSource
         .adaptiveSchema(s, s"$dir/events.parquet")
@@ -2999,37 +2949,25 @@ object EventQueries {
         .start()
       q.awaitTermination()
       rollPath
-    })
+    }
 
   /** Date-partitioned (event_date= hive layout) copy of the RAW
-    * events table, laid out once per (session, sf dir). */
-  private val datePartedDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    * events table, laid out once. */
   private def datePartitionedStore(s: SparkSession, dir: String): String =
-    datePartedDirs.getOrElseUpdate((s, dir), {
-      val out = java.nio.file.Files.createTempDirectory("graft_dateparted")
-        .toString + "/events"
+    Artifacts.once(s, dir, "date_parted") {
+      val out = Artifacts.tempDir(s, "graft_dateparted") + "/events"
       graft.sources.Layout.writeDatePartitioned(events(s, dir), "ts", out)
       out
-    })
+    }
 
-  /** Z-ordered copy of the events table, laid out once per
-    * (session, sf dir). */
-  private val zorderedDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  /** Z-ordered copy of the events table, laid out once. */
   private def zorderedStore(s: SparkSession, dir: String): String =
-    zorderedDirs.getOrElseUpdate((s, dir), {
-      val out = java.nio.file.Files.createTempDirectory("graft_zorder")
-        .toString + "/events"
+    Artifacts.once(s, dir, "zordered") {
+      val out = Artifacts.tempDir(s, "graft_zorder") + "/events"
       graft.sources.Layout.writeZOrdered(events(s, dir),
         Seq("user_id", "ts"), out, files = 8)
       out
-    })
-
-  /** bucketed_cohort_spend's (events, users) bucketed tables, laid out
-    * once per (session, sf dir). */
-  private val bucketedTabs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
+    }
 
   /** Lay out the events table and its derived per-user cohort profile
     * as co-bucketed tables (8 buckets on user_id, one file per bucket,
@@ -3037,11 +2975,11 @@ object EventQueries {
     * names. The layout job runs once; every subsequent join on
     * user_id is exchange-free. */
   private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketedTabs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "bucketed") {
       import graft.sources.EventSource
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      val base = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+      val base = Artifacts.tempDir(s, "graft_bkt")
       val ev = events(s, dir)
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast(LongType).as("value_cents"))
@@ -3051,12 +2989,7 @@ object EventQueries {
       EventSource.writeBucketed(ev, evT, s"$base/ev", "user_id", 8)
       EventSource.writeBucketed(users, usT, s"$base/users", "user_id", 8)
       (evT, usT)
-    })
-
-  /** stream_sessions' closed-session parquet, built once per (session,
-    * sf dir). */
-  private val streamSessionDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    }
 
   /** Replay the sf events through
     * [[graft.streaming.StreamingIngest.sessionizeStream]] via
@@ -3064,7 +2997,7 @@ object EventQueries {
     * path. Watermark delay 0: all real events arrive in one batch, so
     * nothing is late relative to the still-epoch watermark. */
   private def streamedSessions(s: SparkSession, dir: String): String =
-    streamSessionDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_session") {
       import s.implicits._
       replayThroughState(s, "streamsess",
         events(s, dir).select(col("user_id").cast(LongType), col("ts")),
@@ -3072,21 +3005,14 @@ object EventQueries {
           Seq((-2L, ts("2100-06-01T00:00"))).toDF("user_id", "ts")),
         graft.streaming.StreamingIngest.sessionizeStream(_, gapMinutes = 30,
           watermarkDelay = "0 seconds"))
-    })
+    }
 
-  /** stream_sessions_capped's drained output, built once per
-    * (session, sf dir): same replay choreography, the capped twin's
-    * gap/cap parameters matching `event_sessions_capped`. */
-  private val streamCappedSessionDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   /** stream_next_examples' replayed output dir, built once per
     * (session, sf dir). Same landing choreography as the capped
     * sessions; far-future sentinels push the watermark past every
     * real event so the drain completes. */
-  private val streamNextExampleDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedNextExamples(s: SparkSession, dir: String): String =
-    streamNextExampleDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_next_example") {
       import s.implicits._
       replayThroughState(s, "streamne",
         events(s, dir).select(col("user_id").cast(LongType), col("ts"),
@@ -3097,10 +3023,13 @@ object EventQueries {
             .toDF("user_id", "ts", "event_type", "event_id")),
         graft.streaming.StreamingIngest.nextExampleStream(_, k = 3,
           watermarkDelay = "0 seconds"))
-    })
+    }
 
+  /** stream_sessions_capped's drained output, built once per
+    * (session, sf dir): same replay choreography, the capped twin's
+    * gap/cap parameters matching `event_sessions_capped`. */
   private def streamedCappedSessions(s: SparkSession, dir: String): String =
-    streamCappedSessionDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_capped_session") {
       import s.implicits._
       replayThroughState(s, "streamcap",
         events(s, dir).select(col("user_id").cast(LongType), col("ts")),
@@ -3109,26 +3038,22 @@ object EventQueries {
         graft.streaming.StreamingIngest.cappedSessionStream(_,
           gapMinutes = 720, maxDurationMinutes = 1440,
           watermarkDelay = "0 seconds"))
-    })
+    }
 
   /** Day-grain histogram tier over [[ensureRoutedHist]]'s tall
     * partials, built and registered once per (session, sf dir). */
-  private val routedHistDayDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def ensureRoutedHistDay(s: SparkSession, dir: String): Unit = {
-    ensureRoutedHist(s, dir)
-    routedHistDayDirs.getOrElseUpdate((s, dir), {
+    val partials = ensureRoutedHist(s, dir)
+    Artifacts.once(s, dir, "routed_hist_day") {
       import graft.operators.{Rollups, Timeseries}
       import graft.plans.RollupRouting
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_hdaypartials").toString
-      Rollups.materializeHistogramDayPartials(
-        Rollups.read(s, routedHistDirs((s, dir))), out)
+      val out = Artifacts.tempDir(s, "graft_hdaypartials")
+      Rollups.materializeHistogramDayPartials(Rollups.read(s, partials), out)
       RollupRouting.registerHistogramDayGrain(s, events(s, dir),
         Rollups.read(s, out), Seq("event_type"),
         Timeseries.histBucket(histFact))
       out
-    })
+    }
     ()
   }
 
@@ -3178,10 +3103,9 @@ object EventQueries {
     * per (session, sf dir) by replaying the events parquet as a
     * bounded file stream of cents-valued samples. */
   private def maintainedKllRollup(s: SparkSession, dir: String): String =
-    streamRollupDirs.getOrElseUpdate((s, s"$dir#kll"), {
+    Artifacts.once(s, dir, "stream_kll") {
       import graft.streaming.StreamingIngest
-      val base = java.nio.file.Files.createTempDirectory("graft_streamkll")
-        .toString
+      val base = Artifacts.tempDir(s, "graft_streamkll")
       val rollPath = s"$base/rollup"
       val schema = graft.sources.EventSource
         .adaptiveSchema(s, s"$dir/events.parquet")
@@ -3200,14 +3124,12 @@ object EventQueries {
         .start()
       q.awaitTermination()
       rollPath
-    })
+    }
 
   /** stream_funnel's stage-advancement parquet, built once per
     * (session, sf dir). */
-  private val streamFunnelDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedFunnel(s: SparkSession, dir: String): String =
-    streamFunnelDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_funnel") {
       import s.implicits._
       replayThroughState(s, "streamfunnel",
         events(s, dir).select(col("user_id").cast(LongType), col("ts"),
@@ -3218,12 +3140,7 @@ object EventQueries {
             .toDF("user_id", "ts", "event_id", "event_type")),
         graft.streaming.StreamingIngest.funnelStream(_,
           Seq("signup", "click", "purchase"), watermarkDelay = "0 seconds"))
-    })
-
-  /** stream_click_attrib's matched-pair parquet, built once per
-    * (session, sf dir). */
-  private val streamAttribDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    }
 
   /** Replay the sf events through
     * [[graft.streaming.StreamingIngest.attributionStream]] via
@@ -3231,7 +3148,7 @@ object EventQueries {
     * Sentinels carry a non-click/purchase event_type, so they advance
     * the watermark (evicting join state) without ever matching. */
   private def streamedAttribution(s: SparkSession, dir: String): String =
-    streamAttribDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_attrib") {
       import s.implicits._
       replayThroughState(s, "streamattrib",
         events(s, dir).select(col("event_id").cast(LongType),
@@ -3242,7 +3159,7 @@ object EventQueries {
             .toDF("event_id", "user_id", "event_type", "ts")),
         graft.streaming.StreamingIngest.attributionStream(_,
           windowSeconds = 3600L, watermarkDelay = "0 seconds"))
-    })
+    }
 
   /** stream_cdc_user_state's maintained-state path, built once per
     * (session, sf dir): the event change log lands as TWO parquet
@@ -3250,35 +3167,20 @@ object EventQueries {
     * micro-batches through
     * [[graft.streaming.StreamingIngest.maintainState]] — a real
     * v=0 → v=1 version chain, not a single-apply degenerate. */
-  private val streamCdcDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedCdcState(s: SparkSession, dir: String): String =
-    streamCdcDirs.getOrElseUpdate((s, dir), {
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
-      val base = Files.createTempDirectory("graft_streamcdc").toString
-      val landing = s"$base/landing"
-      Files.createDirectories(Paths.get(landing))
+    Artifacts.once(s, dir, "stream_cdc") {
+      val base = Artifacts.tempDir(s, "graft_streamcdc")
       val ops = events(s, dir)
         .select(col("user_id"), col("event_type"), cents.as("last_cents"),
           col("ts"), col("event_id"))
         .withColumn("op",
           when(col("event_type") === "error", "D").otherwise("U"))
       val cut = lit(java.sql.Timestamp.valueOf("2024-01-08 00:00:00"))
-      def land(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val tmp = s"$base/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val dest = Paths.get(landing, s"$name.parquet")
-        Files.move(Paths.get(part), dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
       val t0 = System.currentTimeMillis()
-      land(ops.where(col("ts") < cut), "f1", t0)
-      land(ops.where(col("ts") >= cut), "f2", t0 + 60000L)
+      landFile(base, ops.where(col("ts") < cut), "f1", t0)
+      landFile(base, ops.where(col("ts") >= cut), "f2", t0 + 60000L)
       val stream = s.readStream.schema(ops.schema)
-        .option("maxFilesPerTrigger", "1").parquet(landing)
+        .option("maxFilesPerTrigger", "1").parquet(s"$base/landing")
       val q = graft.streaming.StreamingIngest
         .maintainState(stream, Seq("user_id"),
           Seq("event_type", "last_cents"), Seq("ts", "event_id"), "op",
@@ -3288,22 +3190,16 @@ object EventQueries {
         .start()
       q.awaitTermination()
       s"$base/state"
-    })
+    }
 
   /** stream_scd_click_level's enriched-clicks path, built once per
     * (session, sf dir): the Type-2 dimension builds offline from
     * purchases exactly as the batch query does; the clicks replay as
     * two mid-history file batches through
     * [[graft.streaming.StreamingIngest.enrichPointInTime]]. */
-  private val streamScdDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedScdClicks(s: SparkSession, dir: String): String =
-    streamScdDirs.getOrElseUpdate((s, dir), {
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
-      val base = Files.createTempDirectory("graft_streamscd").toString
-      val landing = s"$base/landing"
-      Files.createDirectories(Paths.get(landing))
+    Artifacts.once(s, dir, "stream_scd") {
+      val base = Artifacts.tempDir(s, "graft_streamscd")
       val e = events(s, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -3316,20 +3212,11 @@ object EventQueries {
       val clicks = e.where(col("event_type") === "click")
         .select(col("user_id"), col("ts"))
       val cut = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
-      def land(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val tmp = s"$base/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val dest = Paths.get(landing, s"$name.parquet")
-        Files.move(Paths.get(part), dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
       val t0 = System.currentTimeMillis()
-      land(clicks.where(col("ts") < cut), "f1", t0)
-      land(clicks.where(col("ts") >= cut), "f2", t0 + 60000L)
+      landFile(base, clicks.where(col("ts") < cut), "f1", t0)
+      landFile(base, clicks.where(col("ts") >= cut), "f2", t0 + 60000L)
       val stream = s.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", "1").parquet(landing)
+        .option("maxFilesPerTrigger", "1").parquet(s"$base/landing")
       val q = graft.streaming.StreamingIngest
         .enrichPointInTime(stream, scd2, Seq("user_id"), "ts",
           Seq("level"), s"$base/enriched")
@@ -3338,39 +3225,25 @@ object EventQueries {
         .start()
       q.awaitTermination()
       s"$base/enriched"
-    })
+    }
 
   /** stream_late_profile's per-batch lateness reports, built once per
     * (session, sf dir): batch 1 is the pre-cut history MINUS the
     * replayed ids, batch 2 the post-cut rows PLUS those replays — so
     * the second batch arrives with genuinely old event times and the
     * monitor's high-water-mark rule must count exactly them late. */
-  private val streamLateDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedLateReports(s: SparkSession, dir: String): String =
-    streamLateDirs.getOrElseUpdate((s, dir), {
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
-      val base = Files.createTempDirectory("graft_streamlate").toString
-      val landing = s"$base/landing"
-      Files.createDirectories(Paths.get(landing))
+    Artifacts.once(s, dir, "stream_late") {
+      val base = Artifacts.tempDir(s, "graft_streamlate")
       val ev = events(s, dir).select(col("event_id"), col("ts"))
       val cut = lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
       val replayed = col("event_id") % 50 === 0
-      def land(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val tmp = s"$base/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val dest = Paths.get(landing, s"$name.parquet")
-        Files.move(Paths.get(part), dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
       val t0 = System.currentTimeMillis()
-      land(ev.where(col("ts") < cut && !replayed), "f1", t0)
-      land(ev.where(col("ts") >= cut || replayed), "f2", t0 + 60000L)
+      landFile(base, ev.where(col("ts") < cut && !replayed), "f1", t0)
+      landFile(base, ev.where(col("ts") >= cut || replayed), "f2",
+        t0 + 60000L)
       val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(landing)
+        .option("maxFilesPerTrigger", "1").parquet(s"$base/landing")
       val q = graft.streaming.StreamingIngest
         .monitorLateness(stream, "ts", horizonSec = 3600L,
           s"$base/reports")
@@ -3379,39 +3252,24 @@ object EventQueries {
         .start()
       q.awaitTermination()
       s"$base/reports"
-    })
+    }
 
   /** stream_quality_monitor's per-batch report path, built once per
     * (session, sf dir): same two-file mid-history landing split as
     * [[streamedCdcState]], through
     * [[graft.streaming.StreamingIngest.monitorQuality]]. */
-  private val streamQualityDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedQualityReports(s: SparkSession, dir: String): String =
-    streamQualityDirs.getOrElseUpdate((s, dir), {
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
+    Artifacts.once(s, dir, "stream_quality") {
       import graft.operators.Quality
-      val base = Files.createTempDirectory("graft_streamqual").toString
-      val landing = s"$base/landing"
-      Files.createDirectories(Paths.get(landing))
+      val base = Artifacts.tempDir(s, "graft_streamqual")
       val ev = events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"), col("ts"))
       val cut = lit(java.sql.Timestamp.valueOf("2024-01-08 00:00:00"))
-      def land(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val tmp = s"$base/tmp_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val dest = Paths.get(landing, s"$name.parquet")
-        Files.move(Paths.get(part), dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
       val t0 = System.currentTimeMillis()
-      land(ev.where(col("ts") < cut), "f1", t0)
-      land(ev.where(col("ts") >= cut), "f2", t0 + 60000L)
+      landFile(base, ev.where(col("ts") < cut), "f1", t0)
+      landFile(base, ev.where(col("ts") >= cut), "f2", t0 + 60000L)
       val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(landing)
+        .option("maxFilesPerTrigger", "1").parquet(s"$base/landing")
       val q = graft.streaming.StreamingIngest
         .monitorQuality(stream, Seq(
           Quality.NotNull("user_id"),
@@ -3422,7 +3280,25 @@ object EventQueries {
         .start()
       q.awaitTermination()
       s"$base/reports"
-    })
+    }
+
+  /** Land `df` as the ONE parquet file `<base>/landing/<name>.parquet`
+    * with modification time `mtimeMs`: a file stream over the landing
+    * dir with `maxFilesPerTrigger = 1` then replays each landed file as
+    * its own micro-batch, in mtime order. */
+  private[queries] def landFile(base: String, df: DataFrame, name: String,
+      mtimeMs: Long): Unit = {
+    import java.nio.file.{Files, Paths}
+    val tmp = s"$base/tmp_$name"
+    df.coalesce(1).write.parquet(tmp)
+    val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).head
+    val dest = Files.createDirectories(Paths.get(base, "landing"))
+      .resolve(s"$name.parquet")
+    Files.move(Paths.get(part), dest)
+    Files.setLastModifiedTime(dest,
+      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+  }
 
   /** Shared bounded-replay choreography for the stateful streaming
     * twins (`stream_sessions` / `stream_user_features` /
@@ -3439,28 +3315,15 @@ object EventQueries {
   private def replayThroughState(s: SparkSession, tag: String,
       f1: DataFrame, sentinels: Seq[DataFrame],
       op: DataFrame => org.apache.spark.sql.Dataset[_]): String = {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.FileTime
-    val base = Files.createTempDirectory(s"graft_$tag").toString
-    val landing = s"$base/landing"
-    Files.createDirectories(Paths.get(landing))
+    val base = Artifacts.tempDir(s, s"graft_$tag")
     val outPath = s"$base/out"
-    def writeFile(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val tmp = s"$base/tmp_$name"
-      df.coalesce(1).write.parquet(tmp)
-      val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      val dest = Paths.get(landing, s"$name.parquet")
-      Files.move(Paths.get(part), dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-    }
     val t0 = System.currentTimeMillis()
-    writeFile(f1, "f1", t0)
+    landFile(base, f1, "f1", t0)
     sentinels.zipWithIndex.foreach { case (df, i) =>
-      writeFile(df, s"f${i + 2}", t0 + (i + 1) * 60000L)
+      landFile(base, df, s"f${i + 2}", t0 + (i + 1) * 60000L)
     }
     val stream = s.readStream.schema(f1.schema)
-      .option("maxFilesPerTrigger", "1").parquet(landing)
+      .option("maxFilesPerTrigger", "1").parquet(s"$base/landing")
     val q = op(stream)
       .writeStream.outputMode("append").format("parquet")
       .option("path", outPath)
@@ -3474,11 +3337,8 @@ object EventQueries {
   /** stream_user_features' rolling-feature parquet, built once per
     * (session, sf dir). Same landing choreography as
     * [[streamedAnomalies]]. */
-  private val streamFeatureDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   private def streamedFeatures(s: SparkSession, dir: String): String =
-    streamFeatureDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_feature") {
       import s.implicits._
       replayThroughState(s, "streamfeat",
         events(s, dir).select(col("user_id").cast(LongType), col("ts"),
@@ -3489,12 +3349,7 @@ object EventQueries {
             .toDF("user_id", "ts", "event_id")),
         graft.streaming.StreamingIngest.userFeatureStream(_,
           windowSecs = 3600L, watermarkDelay = "0 seconds"))
-    })
-
-  /** stream_anomalies' flagged-observation parquet, built once per
-    * (session, sf dir). */
-  private val streamAnomalyDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    }
 
   /** Replay the sf events through
     * [[graft.streaming.StreamingIngest.anomalyStream]] via
@@ -3502,7 +3357,7 @@ object EventQueries {
     * Sentinel users are negative and filtered at serve time (their
     * rings never reach minN, so they can't emit). */
   private def streamedAnomalies(s: SparkSession, dir: String): String =
-    streamAnomalyDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_anomaly") {
       import s.implicits._
       replayThroughState(s, "streamanom",
         events(s, dir).select(col("user_id").cast(LongType), col("ts"),
@@ -3513,20 +3368,12 @@ object EventQueries {
             .toDF("user_id", "ts", "event_id", "value_cents")),
         graft.streaming.StreamingIngest.anomalyStream(_, baseN = 20,
           minN = 8, k = 3, watermarkDelay = "0 seconds"))
-    })
+    }
 
-  /** stream_ewma's smoothed-observation parquet, built once per
-    * (session, sf dir) — batch twin's user subset (< 40) applied on
-    * the input side; sentinel users (-1/-2) advance the watermark and
-    * are filtered from the served output. */
-  private val streamEwmaDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   /** stream_holt's per-event state parquet, built once per (session,
     * sf dir). Same landing choreography as [[streamedEwma]]. */
-  private val streamHoltDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedHolt(s: SparkSession, dir: String): String =
-    streamHoltDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_holt") {
       import s.implicits._
       replayThroughState(s, "streamholt",
         events(s, dir).where(col("user_id") < 40)
@@ -3538,14 +3385,12 @@ object EventQueries {
             .toDF("user_id", "ts", "event_id", "value_cents")),
         graft.streaming.StreamingIngest.holtStream(_,
           watermarkDelay = "0 seconds"))
-    })
+    }
 
   /** stream_cusum's flagged-drift parquet, built once per (session,
     * sf dir). Same landing choreography as [[streamedEwma]]. */
-  private val streamCusumDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def streamedCusum(s: SparkSession, dir: String): String =
-    streamCusumDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_cusum") {
       import s.implicits._
       replayThroughState(s, "streamcusum",
         events(s, dir).where(col("user_id") < 40)
@@ -3558,10 +3403,14 @@ object EventQueries {
         graft.streaming.StreamingIngest.cusumStream(_,
           target = 5000L, slack = 1000L, threshold = 20000L,
           watermarkDelay = "0 seconds"))
-    })
+    }
 
+  /** stream_ewma's smoothed-observation parquet, built once per
+    * (session, sf dir) — batch twin's user subset (< 40) applied on
+    * the input side; sentinel users (-1/-2) advance the watermark and
+    * are filtered from the served output. */
   private def streamedEwma(s: SparkSession, dir: String): String =
-    streamEwmaDirs.getOrElseUpdate((s, dir), {
+    Artifacts.once(s, dir, "stream_ewma") {
       import s.implicits._
       replayThroughState(s, "streamewma",
         events(s, dir).where(col("user_id") < 40)
@@ -3573,7 +3422,7 @@ object EventQueries {
             .toDF("user_id", "ts", "event_id", "value_cents")),
         graft.streaming.StreamingIngest.ewmaStream(_, w = 8,
           watermarkDelay = "0 seconds"))
-    })
+    }
 
   // ---------------------------------------------------------------- oracles
 

@@ -26,10 +26,6 @@ object RelationalQueries {
     round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000)
       .cast(LongType)
 
-  /** q1 revenue-MV registration, once per (session, sf dir). */
-  private val q1MvDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   /** The part CO-PURCHASE graph both graph queries read: one edge per
     * unordered part pair sharing at least one order. One derivation —
     * the triangle and hop queries must never diverge on what the
@@ -478,16 +474,15 @@ object RelationalQueries {
       import graft.plans.RollupRouting
       val li = read(s, dir, "lineitem").withColumn("rev_e4", revE4)
       val dims = Seq("l_returnflag", "l_linestatus")
-      q1MvDirs.getOrElseUpdate((s, dir), {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_mv_q1").toString
+      Artifacts.once(s, dir, "q1_mv") {
+        val out = Artifacts.tempDir(s, "graft_mv_q1")
         Rollups.materializePartials(li, dims, out,
           tsCol = "l_shipdate", valueCol = "rev_e4")
         RollupRouting.install(s)
         RollupRouting.register(s, li, Rollups.read(s, out), dims,
           tsCol = "l_shipdate", valueCol = "rev_e4")
         out
-      })
+      }
       li.where(col("l_shipdate") <
           lit(java.sql.Timestamp.valueOf("1998-09-01 00:00:00")))
         .groupBy(col("l_returnflag"), col("l_linestatus"))

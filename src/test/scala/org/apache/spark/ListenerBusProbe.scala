@@ -1,0 +1,12 @@
+package org.apache.spark
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.scheduler.SparkListenerInterface
+
+/** Test-side view of a context's listener bus, which Spark keeps
+  * package-private. */
+object ListenerBusProbe {
+  def count[T <: SparkListenerInterface: ClassTag](sc: SparkContext): Int =
+    sc.listenerBus.findListenersByClass[T]().size
+}
