@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -297,148 +297,286 @@ object Similarity {
   /** PRODUCT QUANTIZATION training (PQ — the FAISS-style memory scale
     * path past int8's 4×): split the `dim` dimensions into `m`
     * contiguous subspaces and k-means each subspace to `ks` centroids
-    * via [[kmeansFit]] (deterministic seeding/stopping, so the
-    * codebook is a pure function of the corpus). Returns the codebook
-    * as `m × ks × (dim/m)` doubles — the ONE bounded driver-side
-    * collect of this pipeline (dim × ks doubles total, the same
-    * bounded-centroid footprint as the IVF index), broadcast back as
+    * with the shared Lloyd core [[lloydTrain]] (deterministic
+    * seeding/stopping, so the codebook is a pure function of the
+    * corpus). Returns the codebook as `m × ks × (dim/m)` doubles — the
+    * bounded-centroid footprint of the IVF index, broadcast back as
     * literals at encode/serve time.
     *
     * `trainSampleN` bounds the TRAINING input (the 100 TB posture):
     * Lloyd runs over the deterministic [[trainingSample]] of that
     * size instead of the whole corpus — FAISS trains PQ codebooks on
     * a bounded sample by default (hundreds of points per code
-    * suffice), and a corpus-sized train loop was the one build stage
-    * here that grew with the corpus. Sampling is the DEFAULT: the
-    * `-1` sentinel resolves to `256·ks` points (the ~FAISS floor of
-    * hundreds of points per code), so a default build stops growing
-    * with the corpus; pass an explicit size to widen, or `0` to
-    * opt OUT into full-corpus training (the pre-round-14 behavior —
-    * an audit/repro knob, never the deployment default). The
-    * codebook is a pure function of (corpus ids+vectors, trainSeed,
-    * resolved sample size); a corpus of at most that many rows
-    * trains on every row. Encode/serve recall gates are unchanged —
-    * gate recall in-plan as ever, never assume a sampled codebook
-    * ranks identically.
-    *
-    * EXECUTION (r14 VERDICT #4): the sampled path (the default) runs
-    * Lloyd ON THE DRIVER over the one collected sample — the
-    * distributed loop was maxIter sequential Spark jobs over ~4 KB/row
-    * data, i.e. scheduler round-trips, not compute (measured ~4.5 s of
-    * a ~7 s sf0.1 PQ build). One bounded job (the TakeOrdered sample
-    * collect, sampleN × dim doubles — the same envelope the codebook
-    * collect already pays) replaces them; the caller's `dotFn` Column
-    * function is compiled ONCE into a driver-side scalar evaluator
-    * (same catalyst expression, same sequential-fold arithmetic), so
-    * assignment scoring is bit-identical to the in-plan form. Centroid
-    * means sum in ascending-id order — deterministic and
-    * layout-independent like before, though the final ulps of a mean
-    * may differ from the distributed partial-aggregation order (the
-    * serve gates recall in-plan, and the oracle never sees the
-    * codebook). `trainSampleN = 0` opts out into the distributed
-    * full-corpus loop unchanged (the audit/repro knob — never collect
-    * an unbounded corpus to the driver). An EXPLICIT positive
-    * trainSampleN is likewise collected — it is a caller-declared
-    * driver budget (sampleN × dim doubles); use `0` when the training
-    * set must stay distributed. */
+    * suffice), so a default build stops growing with the corpus. The
+    * `-1` default resolves to `256·ks` points; pass an explicit size to
+    * widen, or `0` to train on every row (an audit/repro knob, never
+    * the deployment default). The codebook is a pure function of
+    * (corpus ids+vectors, trainSeed, resolved sample size); a corpus of
+    * at most that many rows trains on every row. Encode/serve recall
+    * gates are unchanged — gate recall in-plan as ever, never assume a
+    * sampled codebook ranks identically. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String, m: Int,
       ks: Int, dotFn: (Column, Column) => Column = dot,
       maxIter: Int = 6, trainSampleN: Int = -1,
       trainSeed: Int = 42): Seq[Seq[Seq[Double]]] = {
     require(m > 0 && ks > 1, "need m >= 1 subspaces and ks >= 2 codes")
     val sampleN = if (trainSampleN < 0) 256 * ks else trainSampleN
-    if (sampleN > 0)
-      pqTrainLocal(corpus, idCol, vecCol, m, ks, dotFn, maxIter,
-        sampleN, trainSeed)
-    else
-      pqTrainDistributed(corpus, idCol, vecCol, m, ks, dotFn, maxIter)
+    lloydTrain(corpus, idCol, vecCol, m, ks, dotFn, maxIter, 1e-9,
+      sampleN, trainSeed).toSeq.map(_.toSeq.map(_.toSeq))
   }
 
-  /** The sampled (default) PQ training path: ONE bounded sample
-    * collect, then the joint Lloyd loop in plain driver-side loops —
-    * semantics exactly [[pqTrainDistributed]]'s (smallest-id seeds of
-    * the training frame, strict-improvement argmax with ties to the
-    * lower part, empty clusters retain their centroid, converged
-    * subspaces freeze, tol/maxIter identical); means sum in
-    * ascending-id order. */
-  private def pqTrainLocal(corpus: DataFrame, idCol: String,
-      vecCol: String, m: Int, ks: Int,
-      dotFn: (Column, Column) => Column, maxIter: Int,
-      sampleN: Int, trainSeed: Int): Seq[Seq[Seq[Double]]] = {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val spark = corpus.sparkSession
-    // the one Spark job of this path: the deterministic bounded sample,
-    // collected in ascending-id order (sum order below)
-    val rows = trainingSample(corpus, idCol, sampleN, trainSeed)
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("fv"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    require(rows.nonEmpty, "corpus is empty")
-    val dim = rows(0)._2.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
-    val score = scalarScoreEvaluator(spark, dotFn)
-    val n = rows.length
-    // per (row, subspace) subvectors, wrapped once for the evaluator
-    val sv: Array[Array[Array[Double]]] = rows.map { case (_, fv) =>
-      Array.tabulate(m)(j => java.util.Arrays.copyOfRange(fv, j * sub, (j + 1) * sub))
+  /** Doubles (training rows × dim) the local Lloyd executor may collect
+    * to the driver: 2²⁰ = 8 MiB. */
+  private[graft] val LocalTrainBudget = 1L << 20
+
+  /** The executor choice: a training set of `rows` × `dim` doubles
+    * trains on the driver iff it fits [[LocalTrainBudget]]. */
+  private[graft] def trainsLocally(rows: Long, dim: Int): Boolean =
+    rows * dim <= LocalTrainBudget
+
+  /** THE Lloyd (k-means) core behind [[pqTrain]] (`m` subspaces) and
+    * [[kmeansFit]] (`m = 1`). It trains over the deterministic
+    * [[trainingSample]] of `sampleN` rows (`0` = every row) and owns
+    * the algorithm's one definition (see [[lloyd]]).
+    *
+    * The executor is picked by OBSERVED size — resolved training rows
+    * × dim against [[LocalTrainBudget]] — never by the sample knob, so
+    * no collect exceeds the budget. A training set that fits is
+    * collected once (for a sample that fits at its full `sampleN`,
+    * that collect is the only job: no count, no dim probe) and
+    * iterated on the driver ([[LocalLloyd]]: a
+    * Spark-side iteration over a few thousand rows is scheduler
+    * round-trips, not compute); a larger one stays distributed
+    * ([[DistributedLloyd]]). Local means sum in ascending-id order, so
+    * the final ulps of a centroid may differ from the distributed
+    * partial-aggregation order (the serve gates recall in-plan, and
+    * the oracle never sees the codebook).
+    *
+    * @return cent(j)(p) — subspace j's centroid p */
+  private def lloydTrain(corpus: DataFrame, idCol: String, vecCol: String,
+      m: Int, ks: Int, dotFn: (Column, Column) => Column, maxIter: Int,
+      tol: Double, sampleN: Int,
+      trainSeed: Int): Array[Array[Array[Double]]] = {
+    val sampled = if (sampleN > 0)
+      trainingSample(corpus, idCol, sampleN, trainSeed) else corpus
+    val id = col(idCol).cast("long").as("id")
+    val fv = col(vecCol).cast("array<double>")
+    val train = sampled.select(id, fv.as("fv"))
+    def sub(dim: Int) = {
+      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+      dim / m
     }
-    val svData: Array[Array[ArrayData]] =
-      sv.map(_.map(a => ArrayData.toArrayData(a): ArrayData))
-    val seeds = rows.take(ks).map(_._2)
-    val tol = 1e-9
-    val cent: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
-      seeds.map(fv => java.util.Arrays.copyOfRange(fv, j * sub, (j + 1) * sub)))
-    var active = (0 until m).toSet
+    // A sample of at most sampleN rows fits when no vector is longer
+    // than budget / sampleN: its one job collects it, each vector
+    // shipped only if it is that short (sized on the raw column, so the
+    // select stays one projection over the sample's top-n).
+    val fit = if (sampleN > 0 && trainsLocally(sampleN, 1))
+      sampled.select(id, when(size(col(vecCol)) <=
+        LocalTrainBudget / sampleN, fv).as("fv")).collect()
+    else Array.empty[Row]
+    val exec = if (fit.nonEmpty && !fit.exists(_.isNullAt(1)))
+      new LocalLloyd(train.sparkSession, fit, m,
+        sub(fit(0).getSeq[Double](1).size), dotFn)
+    else {
+      val first = corpus.select(size(col(vecCol))).take(1)
+      require(first.nonEmpty, "corpus is empty")
+      val dim = first(0).getInt(0)
+      val rows = if (fit.nonEmpty) fit.length.toLong
+        else corpus.count().min(if (sampleN > 0) sampleN else Long.MaxValue)
+      if (trainsLocally(rows, dim)) new LocalLloyd(train, m, sub(dim), dotFn)
+      else new DistributedLloyd(train, m, sub(dim), dotFn)
+    }
+    lloyd(exec, ks, maxIter, tol)
+  }
+
+  /** The joint Lloyd loop over `exec.m` subspaces — the one outer loop:
+    *  - seeds are the `ks` smallest-id vectors of the training frame;
+    *  - each step assigns a subvector to its best-scoring centroid
+    *    (NaN above +∞, a null score last, ties to the lower part);
+    *  - an empty cluster keeps its centroid;
+    *  - a subspace whose centroids moved at most `tol` (max L2) is
+    *    FROZEN out of later iterations (so a sub-tol wobble cannot keep
+    *    nudging it); at most `maxIter` iterations run.
+    * Releases whatever the executor holds, on success or failure. */
+  private[graft] def lloyd(exec: LloydExecutor, ks: Int, maxIter: Int,
+      tol: Double): Array[Array[Array[Double]]] = try {
+    val seeds = exec.seeds(ks)
+    require(seeds.nonEmpty, "corpus is empty")
+    val sub = exec.sub
+    val cent = Array.tabulate(exec.m)(j => seeds.map(fv =>
+      java.util.Arrays.copyOfRange(fv, j * sub, (j + 1) * sub)))
+    var active: Seq[Int] = 0 until exec.m
     var iter = 0
     while (active.nonEmpty && iter < maxIter) {
-      val act = active.toSeq.sorted
-      val still = scala.collection.mutable.Set.empty[Int]
-      act.foreach { j =>
-        val nSeeds = cent(j).length
-        val centData = cent(j).map(a => ArrayData.toArrayData(a): ArrayData)
-        val sums = Array.fill(nSeeds, sub)(0.0)
-        val counts = new Array[Long](nSeeds)
-        var i = 0
-        while (i < n) {
-          var best = Double.NegativeInfinity
-          var bestP = 0
-          var p = 0
-          while (p < nSeeds) {
-            val s = score(svData(i)(j), centData(p))
-            if (s > best) { best = s; bestP = p } // ties keep the lower part
-            p += 1
-          }
-          val v = sv(i)(j)
-          var d = 0
-          while (d < sub) { sums(bestP)(d) += v(d); d += 1 }
-          counts(bestP) += 1
-          i += 1
-        }
+      val means = exec.step(active, cent)
+      active = active.filter { j =>
         var moved = 0.0
+        for (p <- cent(j).indices; nv = means(j)(p); if nv != null) {
+          var acc = 0.0
+          var d = 0
+          while (d < sub) {
+            val df = cent(j)(p)(d) - nv(d); acc += df * df; d += 1
+          }
+          val dist = math.sqrt(acc)
+          if (dist > moved) moved = dist
+          cent(j)(p) = nv
+        }
+        moved > tol
+      }
+      iter += 1
+    }
+    cent
+  } finally exec.close()
+
+  /** The data side of one [[lloyd]] iteration, over a training frame of
+    * (`id` long, `fv` array<double>) rows cut into `m` subspaces of
+    * `sub` dimensions. */
+  private[graft] sealed trait LloydExecutor {
+    def m: Int
+    def sub: Int
+    /** The `ks` smallest-id training vectors, ascending id; a duplicate
+      * id fails loudly (an assignment is keyed on (id, subspace)). */
+    def seeds(ks: Int): Array[Array[Double]]
+    /** Per active subspace j, the mean of each part's assigned
+      * subvectors under `cent(j)` — null for a part nothing chose. */
+    def step(active: Seq[Int], cent: Array[Array[Array[Double]]])
+      : Map[Int, Array[Array[Double]]]
+    def close(): Unit = ()
+  }
+
+  private def requireUniqueIds(dup: Option[Long]): Unit =
+    require(dup.isEmpty,
+      s"duplicate id ${dup.get} in the training frame; ids must be unique")
+
+  /** Spark's descending double order (the assignment window's): NaN
+    * ranks above +∞; NaN vs NaN and 0.0 vs -0.0 tie. */
+  private def ranksAbove(s: Double, best: Double): Boolean =
+    s > best || (s.isNaN && !best.isNaN)
+
+  /** The local executor: ONE bounded collect of the training frame (made
+    * by [[lloydTrain]], whose size gate keeps it inside the budget), then
+    * plain driver-side loops. The caller's `dotFn` is compiled once into
+    * a scalar evaluator ([[scalarScoreEvaluator]] — the same catalyst
+    * expression the in-plan form runs). */
+  private[graft] final class LocalLloyd(
+      spark: org.apache.spark.sql.SparkSession, collected: Array[Row],
+      val m: Int, val sub: Int, dotFn: (Column, Column) => Column)
+      extends LloydExecutor {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    def this(train: DataFrame, m: Int, sub: Int,
+        dotFn: (Column, Column) => Column) =
+      this(train.sparkSession, train.collect(), m, sub, dotFn)
+    private val rows = collected
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+    /** training ids, ascending — the row order of [[assign]] */
+    val ids: Array[Long] = rows.map(_._1)
+    private val sv: Array[Array[Array[Double]]] = rows.map { case (_, fv) =>
+      Array.tabulate(m)(j => java.util.Arrays.copyOfRange(fv, j * sub, (j + 1) * sub))
+    }
+    private val svData: Array[Array[ArrayData]] =
+      sv.map(_.map(a => ArrayData.toArrayData(a): ArrayData))
+    private val score = scalarScoreEvaluator(spark, dotFn)
+
+    def seeds(ks: Int): Array[Array[Double]] = {
+      requireUniqueIds(ids.indices.drop(1).collectFirst {
+        case i if ids(i) == ids(i - 1) => ids(i) })
+      rows.take(ks).map(_._2)
+    }
+
+    /** The part each training row (in [[ids]] order) picks in subspace
+      * j under centroids `cj`. */
+    def assign(j: Int, cj: Array[Array[Double]]): Array[Int] = {
+      val centData = cj.map(a => ArrayData.toArrayData(a): ArrayData)
+      Array.tabulate(sv.length) { i =>
+        var best = 0.0
+        var bestP = -1
         var p = 0
-        while (p < nSeeds) {
-          if (counts(p) > 0) { // empty clusters retain their centroid
-            val nv = Array.tabulate(sub)(d => sums(p)(d) / counts(p))
-            var acc = 0.0
-            var d = 0
-            while (d < sub) {
-              val df = cent(j)(p)(d) - nv(d); acc += df * df; d += 1
-            }
-            val dist = math.sqrt(acc)
-            if (dist > moved) moved = dist
-            cent(j)(p) = nv
+        while (p < cj.length) {
+          val s = score(svData(i)(j), centData(p))
+          if (s != null && (bestP < 0 || ranksAbove(s, best))) {
+            best = s; bestP = p
           }
           p += 1
         }
-        if (moved > tol) still += j
+        math.max(bestP, 0) // all-null scores tie: the lower part
       }
-      active = still.toSet
-      iter += 1
     }
-    (0 until m).map(j => cent(j).toSeq.map(_.toSeq))
+
+    def step(active: Seq[Int], cent: Array[Array[Array[Double]]])
+        : Map[Int, Array[Array[Double]]] = active.map { j =>
+      val parts = assign(j, cent(j))
+      val sums = Array.fill(cent(j).length, sub)(0.0)
+      val counts = new Array[Long](cent(j).length)
+      var i = 0
+      while (i < parts.length) {
+        val v = sv(i)(j)
+        val s = sums(parts(i))
+        var d = 0
+        while (d < sub) { s(d) += v(d); d += 1 }
+        counts(parts(i)) += 1
+        i += 1
+      }
+      j -> Array.tabulate(cent(j).length)(p =>
+        if (counts(p) > 0) Array.tabulate(sub)(d => sums(p)(d) / counts(p))
+        else null)
+    }.toMap
+  }
+
+  /** The distributed executor: every active subspace shares ONE Spark
+    * job per iteration over the m×-exploded (id, j, subvector) frame —
+    * the per-j formulation is m × maxIter sequential jobs. Assignment is
+    * a broadcast join + window (`__csim desc`: NaN first, nulls last,
+    * ties to the lower part); means are [[centroids]] keyed on (j,
+    * part). The training frame is cached for the run and released by
+    * `close()`. */
+  private[graft] final class DistributedLloyd(train: DataFrame, val m: Int,
+      val sub: Int, dotFn: (Column, Column) => Column) extends LloydExecutor {
+    private val pinned = train.cache()
+    private val sliced = pinned.select(col("id"),
+      posexplode(array((0 until m).map(j =>
+        slice(col("fv"), j * sub + 1, sub)): _*)).as(Seq("j", "sv")))
+
+    def seeds(ks: Int): Array[Array[Double]] = {
+      val dup = pinned.groupBy(col("id")).count()
+        .where(col("count") > 1).agg(min(col("id"))).head()
+      requireUniqueIds(if (dup.isNullAt(0)) None else Some(dup.getLong(0)))
+      pinned.orderBy(col("id")).limit(ks).collect()
+        .map(_.getSeq[Double](1).toArray)
+    }
+
+    /** (id, j, part, sv): each active subvector's best part. */
+    def assign(active: Seq[Int], cent: Array[Array[Array[Double]]])
+        : DataFrame = {
+      val spark = train.sparkSession
+      import spark.implicits._
+      val centDf = active.flatMap(j => cent(j).toSeq.zipWithIndex.map {
+          case (cv, p) => (j, p.toLong, cv.toSeq) })
+        .toDF("j", "part", "cv")
+      val w = Window.partitionBy(col("id"), col("j"))
+        .orderBy(col("__csim").desc, col("part"))
+      sliced.where(col("j").isin(active: _*))
+        .join(broadcast(centDf), Seq("j"))
+        .select(col("id"), col("j"), col("part"), col("sv"),
+          dotFn(col("sv"), col("cv")).as("__csim"))
+        .withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1)
+        .drop("__csim", "__rn")
+    }
+
+    def step(active: Seq[Int], cent: Array[Array[Array[Double]]])
+        : Map[Int, Array[Array[Double]]] = {
+      val means = centroids(assign(active, cent)
+          .select(struct(col("j"), col("part")).as("jp"), col("sv")), "jp", "sv")
+        .collect().map { r =>
+          val jp = r.getStruct(0)
+          (jp.getInt(0), jp.getLong(1).toInt) -> r.getSeq[Double](1).toArray
+        }.toMap
+      active.map(j => j -> Array.tabulate(cent(j).length)(p =>
+        means.getOrElse((j, p), null))).toMap
+    }
+
+    override def close(): Unit = pinned.unpersist()
   }
 
   /** Compile a caller's `(Column, Column) => Column` score function
@@ -447,12 +585,12 @@ object Similarity {
     * generated projection, so the arithmetic (and any registered
     * native function inside it, e.g. `graft_dot`) is the SAME catalyst
     * code the in-plan form runs — no re-derivation of the score
-    * formula that could drift from the serve. */
+    * formula that could drift from the serve. A null score is `null`. */
   private def scalarScoreEvaluator(
       spark: org.apache.spark.sql.SparkSession,
       fn: (Column, Column) => Column)
       : (org.apache.spark.sql.catalyst.util.ArrayData,
-         org.apache.spark.sql.catalyst.util.ArrayData) => Double = {
+         org.apache.spark.sql.catalyst.util.ArrayData) => java.lang.Double = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
     import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, GenericInternalRow, UnsafeProjection}
     val schema = StructType(Seq(
@@ -471,102 +609,8 @@ object Similarity {
       row.update(0, a)
       row.update(1, b)
       val out = proj(row)
-      // a null score loses to any non-null one (the window form's
-      // descending NULLS LAST), ties keep the lower part either way
-      if (out.isNullAt(0)) Double.NegativeInfinity else out.getDouble(0)
+      if (out.isNullAt(0)) null else out.getDouble(0)
     }
-  }
-
-  /** The full-corpus (trainSampleN = 0) PQ training loop — the
-    * distributed joint Lloyd formulation, retained as the audit/repro
-    * opt-out (an unbounded corpus must never be collected). */
-  private def pqTrainDistributed(corpus: DataFrame, idCol: String,
-      vecCol: String, m: Int, ks: Int,
-      dotFn: (Column, Column) => Column,
-      maxIter: Int): Seq[Seq[Seq[Double]]] = {
-    val dim = corpus.select(size(col(vecCol))).head.getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val train = corpus
-    // ALL m subspace k-means runs share ONE Lloyd loop: the per-j
-    // independent formulation is m × maxIter sequential Spark jobs
-    // (the dominant wall-clock of the whole PQ pipeline at any corpus
-    // size — job count, not data), where the joint loop is maxIter
-    // jobs over an m×-exploded (id, j, subvector) frame. Semantics per
-    // subspace are [[kmeansFit]]'s exactly: smallest-id seeds,
-    // lower-part tie-break, empty clusters retain their centroid, and
-    // a CONVERGED subspace is FROZEN out of later iterations (so a
-    // sub-tol wobble can't keep nudging it past where the
-    // independent run stopped). Contract: ids must be UNIQUE — a
-    // duplicate id contributes ONE assignment row here (the window
-    // keys on (id, subspace)), where the per-subspace formulation
-    // re-joined the assignment onto every duplicate row with
-    // partition-order-dependent tie behavior; neither semantics is
-    // meaningful for duplicated ids, so dedupe upstream.
-    val v = col(vecCol).cast("array<double>")
-    val sliced = train.select(col(idCol).cast("long").as("id"),
-        posexplode(array((0 until m).map(j =>
-          slice(v, j * sub + 1, sub)): _*)).as(Seq("j", "sv")))
-      .cache()
-    // deterministic seeds: the ks smallest-id vectors OF THE TRAINING
-    // FRAME, sliced locally (under sampling the seed set is the
-    // sample's smallest ids — still a pure function of the inputs)
-    val seedRows = train
-      .select(col(idCol).cast("long").as("id"), v.as("fv"))
-      .orderBy(col("id")).limit(ks)
-      .collect().map(_.getSeq[Double](1))
-    require(seedRows.nonEmpty, "corpus is empty")
-    val tol = 1e-9
-    // cent(j)(p) = subvector
-    val cent: Array[Array[Seq[Double]]] = Array.tabulate(m)(j =>
-      seedRows.map(fv => fv.slice(j * sub, (j + 1) * sub)).toArray)
-    var active = (0 until m).toSet
-    var iter = 0
-    while (active.nonEmpty && iter < maxIter) {
-      val centDf = active.toSeq.sorted.flatMap(j =>
-          cent(j).zipWithIndex.map { case (cv, p) => (j, p.toLong, cv) })
-        .toDF("j", "part", "cv")
-      val w = Window.partitionBy(col("id"), col("j"))
-        .orderBy(col("__csim").desc, col("part"))
-      val assigned = sliced.where(col("j").isin(active.toSeq: _*))
-        .join(broadcast(centDf), Seq("j"))
-        .select(col("id"), col("j"), col("part"), col("sv"),
-          dotFn(col("sv"), col("cv")).as("__csim"))
-        .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") === 1)
-      val means = assigned
-        .select(col("j"), col("part"),
-          posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("j"), col("part"), col("pos"))
-        .agg(avg(col("x")).as("mv"))
-        .groupBy(col("j"), col("part"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mv"))))
-          .as("pm"))
-        .select(col("j"), col("part"),
-          transform(col("pm"), _.getField("mv")).as("centroid"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2))
-        .toMap
-      val still = scala.collection.mutable.Set.empty[Int]
-      active.foreach { j =>
-        var moved = 0.0
-        (0 until ks).foreach { p =>
-          means.get((j, p.toLong)).foreach { nv =>
-            val d = math.sqrt(cent(j)(p).lazyZip(nv)
-              .map((a, b) => (a - b) * (a - b)).sum)
-            if (d > moved) moved = d
-            cent(j)(p) = nv
-          }
-        }
-        if (moved > tol) still += j
-      }
-      active = still.toSet
-      iter += 1
-    }
-    sliced.unpersist()
-    (0 until m).map(j => cent(j).toSeq.map(_.toSeq))
   }
 
   /** PQ encode: each vector becomes `m` codes (the best-dot centroid
@@ -732,10 +776,10 @@ object Similarity {
 
   /** Minimum-L2 assignment as a max-score function: argmin ||x−c||² =
     * argmax (x·c − |c|²/2) (the |x|² term is constant per row). Use as
-    * the `dotFn` of [[kmeansFit]]/[[pqTrain]]/[[pqEncode]] to make
-    * them EUCLIDEAN k-means/coding — the metric PQ reconstruction
-    * error is defined in; pure-dot assignment measurably halves PQ
-    * recall on unnormalized embeddings. */
+    * the `dotFn` of [[pqTrain]]/[[kmeansFit]] (the [[lloyd]] core's
+    * assignment) and [[pqEncode]] to make them EUCLIDEAN k-means/coding
+    * — the metric PQ reconstruction error is defined in; pure-dot
+    * assignment measurably halves PQ recall on unnormalized embeddings. */
   def l2Score(dotFn: (Column, Column) => Column = dot)
       : (Column, Column) => Column =
     (a, b) => dotFn(a, b) - dotFn(b, b) * lit(0.5)
@@ -970,56 +1014,24 @@ object Similarity {
     pqEncode(assignedCorpus, vecCol, codebook, encodeDotFn)
       .write.mode("overwrite").partitionBy("part").parquet(path)
 
-  /** One Lloyd (k-means) iteration: assign to the given centroids, then
-    * recompute each partition's mean vector. Iterating this to a fixed
-    * point + [[assignToCentroids]] + [[ivfTopK]] is the full
-    * self-contained IVF pipeline (no pre-existing partition column
-    * needed). */
-  def lloydStep(corpus: DataFrame, cent: DataFrame, idCol: String,
-      vecCol: String, dotFn: (Column, Column) => Column = dot): DataFrame = {
-    val assigned = assignToCentroids(corpus, cent, idCol, vecCol, dotFn)
-    centroids(corpus.join(assigned, Seq(idCol)), "part", vecCol)
-  }
-
-  /** Full k-means driver: iterate [[lloydStep]] from deterministic
-    * seeds until the centroids stop moving (max per-centroid L2
-    * movement ≤ `tol`) or `maxIter` rounds — the index-BUILD loop that
-    * turns a raw embedding corpus into an IVF layout with no
-    * pre-existing partition column and no hand-rolled iteration at the
-    * call site.
+  /** Full k-means: [[lloydTrain]] at `m = 1` — iterate Lloyd from
+    * deterministic seeds until the centroids stop moving (max
+    * per-centroid L2 movement ≤ `tol`) or `maxIter` rounds; the
+    * index-BUILD loop that turns a raw embedding corpus into an IVF
+    * layout with no pre-existing partition column. Seeds are the `k`
+    * smallest-id training vectors, assignment ties break on the lower
+    * part (as in [[assignToCentroids]]), and empty clusters RETAIN
+    * their previous centroid — so two runs over the same corpus
+    * produce identical centroids, which a persisted serving layout
+    * ([[writeIvfCorpus]]) needs to be rebuildable.
     *
-    * Determinism: seeds are the `k` corpus vectors with the SMALLEST
-    * ids (a distributed top-k, insensitive to partitioning and row
-    * order), assignment ties break on the lower part id
-    * ([[assignToCentroids]]), and empty clusters RETAIN their previous
-    * centroid rather than respawning — so two runs over the same
-    * corpus produce identical centroids, which a persisted serving
-    * layout ([[writeIvfCorpus]]) needs to be rebuildable.
-    *
-    * Scale shape: the corpus stays distributed and is scanned once per
-    * iteration (assign = broadcast join + one window shuffle; means =
-    * map-side-combined aggregation). Centroids — k × dim doubles, the
-    * same envelope every step broadcasts anyway — come back to the
-    * driver between iterations, which also RESETS LINEAGE each round:
-    * the next iteration's plan starts from a literal centroid frame,
-    * not an ever-deepening recursive plan (the iterate-a-DataFrame
-    * trap).
-    *
-    * `trainSampleN` bounds the TRAINING input like [[pqTrain]]'s
-    * knob: Lloyd iterates over the deterministic [[trainingSample]]
-    * instead of the corpus (FAISS caps k-means training points per
-    * centroid the same way), so the index BUILD stops growing with
-    * the corpus; [[assignToCentroids]] / [[writeIvfCorpus]] still
-    * cover every row under the frozen trained centroids — exactly the
-    * [[appendIvfCorpus]] contract, where assignment is centroid-
-    * defined and never retrains. Sampling is the DEFAULT: the `-1`
-    * sentinel resolves to `max(64·k, 10⁴)` points (FAISS's
-    * points-per-centroid cap with a floor that keeps small-k fits
-    * well-conditioned); pass an explicit size to widen, or `0` to
-    * opt OUT into full-corpus training (audit/repro only — at corpus
-    * scale that re-buys the O(corpus × maxIter) build). A corpus of
-    * at most the resolved size trains on every row (small fixtures
-    * byte-identical to the unsampled fit).
+    * `trainSampleN` bounds the TRAINING input like [[pqTrain]]'s knob
+    * (FAISS caps k-means training points per centroid the same way):
+    * the `-1` default resolves to `max(64·k, 10⁴)` points, `0` trains on
+    * every row. [[assignToCentroids]] / [[writeIvfCorpus]] still cover
+    * every row under the trained centroids — exactly the
+    * [[appendIvfCorpus]] contract, where assignment is centroid-defined
+    * and never retrains.
     *
     * @return converged (part, centroid) index for [[ivfTopK]] /
     *   [[assignToCentroids]] / [[writeIvfCorpus]] */
@@ -1030,38 +1042,13 @@ object Similarity {
     require(k > 0, "k must be positive")
     require(maxIter >= 1, "maxIter must be >= 1")
     require(tol >= 0.0, "tol must be >= 0")
-    val sampleN = if (trainSampleN < 0) math.max(64 * k, 10000) else trainSampleN
     val spark = corpus.sparkSession
     import spark.implicits._
-    // the sample is scanned once per Lloyd iteration — pin it so the
-    // TakeOrdered that defines it runs once, not once per iteration
-    val train =
-      if (sampleN > 0)
-        trainingSample(corpus, idCol, sampleN, trainSeed)
-          .localCheckpoint(true)
-      else corpus
-    var cent: Seq[(Long, Seq[Double])] = train
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .orderBy(col("id")).limit(k)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i.toLong, r.getSeq[Double](1)) }.toSeq
-    require(cent.nonEmpty, "corpus is empty")
-    var iter = 0
-    var moved = Double.MaxValue
-    while (iter < maxIter && moved > tol) {
-      val prev = cent.toMap
-      val stepped = lloydStep(train, cent.toDF("part", "centroid"),
-        idCol, vecCol, dotFn)
-        .select(col("part").cast("long"), col("centroid"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      cent = cent.map { case (p, old) => (p, stepped.getOrElse(p, old)) }
-      moved = cent.map { case (p, v) =>
-        math.sqrt(prev(p).lazyZip(v).map((a, b) => (a - b) * (a - b)).sum)
-      }.max
-      iter += 1
-    }
-    cent.toDF("part", "centroid")
+    val sampleN = if (trainSampleN < 0) math.max(64 * k, 10000) else trainSampleN
+    lloydTrain(corpus, idCol, vecCol, 1, k, dotFn, maxIter, tol, sampleN,
+        trainSeed)(0).toSeq.zipWithIndex
+      .map { case (c, p) => (p.toLong, c.toSeq) }
+      .toDF("part", "centroid")
   }
 
   /** Persist the IVF-partitioned corpus: vectors co-located by their

@@ -502,8 +502,8 @@ object EmbeddingQueries {
     // codebooks (16 subspaces × 16 codes — 64-dim float32 becomes 16
     // small codes), ADC shortlist of 100 over the codes (no float
     // touches the corpus), exact rerank of the candidates only. The
-    // codebook is a pure function of the corpus (deterministic
-    // kmeansFit per subspace); recall pinned IN-PLAN like int8 (≥3 of
+    // codebook is a pure function of the corpus (the deterministic
+    // Lloyd core per subspace); recall pinned IN-PLAN like int8 (≥3 of
     // 5 exact neighbors per query — measured coverage is complete at
     // this corpus, the band absorbs fixture regeneration drift).
     "ann_pq_rerank" -> ((s, dir) => {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -16,6 +17,20 @@ class SimilaritySpec extends SparkTestBase {
     (3L, Array(-1f, 0f, 0f), 1), // opposite of 0
     (4L, Array(0.999f, 0.0447f, 0f), 2)) // almost 0
     .toDF("vec_id", "embedding", "label")
+
+  private def sf0001Embeddings =
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+
+  /** The Lloyd executors' training frame: (id long, fv array<double>). */
+  private def trainFrame(df: DataFrame) =
+    df.select(col("vec_id").cast("long").as("id"),
+      col("embedding").cast("array<double>").as("fv"))
+
+  private def bothExecutors(train: DataFrame, m: Int, sub: Int,
+      dotFn: (Column, Column) => Column = Similarity.dot)
+      : Seq[Similarity.LloydExecutor] =
+    Seq(new Similarity.LocalLloyd(train, m, sub, dotFn),
+      new Similarity.DistributedLloyd(train, m, sub, dotFn))
 
   test("dot: double fold matches known cosines") {
     val d = corpus.as("a").join(corpus.as("b"),
@@ -84,19 +99,17 @@ class SimilaritySpec extends SparkTestBase {
       "carrying assignment drifted from the corpus join")
   }
 
-  test("lloydStep: recomputed centroids are the assigned-partition means") {
-    val cent = Seq(
-      (0L, Seq(1.0, 0.0, 0.0)),
-      (1L, Seq(0.0, 1.0, 0.0)))
-      .toDF("part", "centroid")
-    val next = Similarity.lloydStep(corpus, cent, "vec_id", "embedding")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+  test("Lloyd step (both executors): the assigned-partition means") {
+    val cent = Array(Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0)))
     // part 0 = mean of vecs {0, 2, 4}; part 1 = mean of {1, 3}
     val exp0 = Seq((1.0 + s2 + 0.999f.toDouble) / 3,
       (s2 + 0.0447f.toDouble) / 3, 0.0)
     val exp1 = Seq(-0.5, 0.5, 0.0)
-    assert(next(0L).zip(exp0).forall { case (a, b) => math.abs(a - b) < 1e-6 })
-    assert(next(1L).zip(exp1).forall { case (a, b) => math.abs(a - b) < 1e-6 })
+    bothExecutors(trainFrame(corpus), m = 1, sub = 3).foreach { exec =>
+      val next = try exec.step(Seq(0), cent)(0) finally exec.close()
+      assert(next(0).toSeq.zip(exp0).forall { case (a, b) => math.abs(a - b) < 1e-6 })
+      assert(next(1).toSeq.zip(exp1).forall { case (a, b) => math.abs(a - b) < 1e-6 })
+    }
   }
 
   test("int8 quantization: known codes, approximate dot within bound") {
@@ -287,12 +300,15 @@ class SimilaritySpec extends SparkTestBase {
     val matches = (c0.zip(exp0) ++ c1.zip(exp1))
       .forall { case (a, b) => math.abs(a - b) < 1e-9 }
     assert(matches, s"not at the cluster means: $got")
-    // fixed point: one more Lloyd step leaves the centroids unchanged
-    val stepped = centMap(
-      Similarity.lloydStep(twoClusters, fit, "vec_id", "embedding"))
-    got.foreach { case (p, v) =>
-      assert(v.zip(stepped(p)).forall { case (a, b) => math.abs(a - b) < 1e-12 },
-        s"centroid $p moved after convergence") }
+    // fixed point: one more Lloyd step, on either executor, leaves the
+    // centroids unchanged
+    val cent = Array(Array(got(0L).toArray, got(1L).toArray))
+    bothExecutors(trainFrame(twoClusters), m = 1, sub = 3).foreach { exec =>
+      val stepped = try exec.step(Seq(0), cent)(0) finally exec.close()
+      got.foreach { case (p, v) =>
+        assert(v.zip(stepped(p.toInt)).forall { case (a, b) => math.abs(a - b) < 1e-12 },
+          s"centroid $p moved after convergence") }
+    }
     // determinism: an identical second run reproduces the index exactly
     val again = centMap(Similarity.kmeansFit(twoClusters, "vec_id",
       "embedding", k = 2, maxIter = 25, tol = 1e-12))
@@ -309,6 +325,152 @@ class SimilaritySpec extends SparkTestBase {
     assert(got.keySet == Set(0L, 1L, 2L))
     got.values.foreach(v =>
       assert(v.forall(x => !x.isNaN && !x.isInfinite), s"bad centroid: $got"))
+  }
+
+  /** Codebooks equal entry-wise: finite values within `tol`, NaN with
+    * NaN, infinities exactly. */
+  private def sameCodebook(a: Array[Array[Array[Double]]],
+      b: Array[Array[Array[Double]]], tol: Double): Boolean = {
+    def same(x: Double, y: Double) =
+      (x.isNaN && y.isNaN) || x == y || math.abs(x - y) <= tol
+    a.length == b.length && a.indices.forall(j =>
+      a(j).length == b(j).length && a(j).indices.forall(p =>
+        a(j)(p).length == b(j)(p).length &&
+          a(j)(p).indices.forall(d => same(a(j)(p)(d), b(j)(p)(d)))))
+  }
+
+  /** (id, j) → part for every training row under `cent`. */
+  private def assignments(exec: Similarity.LloydExecutor,
+      cent: Array[Array[Array[Double]]]): Map[(Long, Int), Int] = exec match {
+    case l: Similarity.LocalLloyd =>
+      (0 until l.m).flatMap(j => l.ids.zip(l.assign(j, cent(j)))
+        .map { case (id, p) => (id, j) -> p }).toMap
+    case d: Similarity.DistributedLloyd =>
+      d.assign(0 until d.m, cent).collect()
+        .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2).toInt).toMap
+  }
+
+  test("Lloyd executors agree on sf0.001: same (id, j) -> part " +
+      "assignments, centroids within 1e-9") {
+    val e = sf0001Embeddings
+    val Seq(local, dist) =
+      bothExecutors(trainFrame(e), m = 8, sub = 8, Similarity.l2Score())
+    val cbL = Similarity.lloyd(local, ks = 8, maxIter = 6, tol = 1e-9)
+    val cbD = Similarity.lloyd(dist, ks = 8, maxIter = 6, tol = 1e-9)
+    assert(sameCodebook(cbL, cbD, 1e-9), "executors trained apart")
+    assert(assignments(local, cbL) == assignments(dist, cbD))
+  }
+
+  test("Lloyd executors: NaN scores rank above +inf on both; same " +
+      "assignments and codebooks") {
+    // an infinite component turns a dot with a 0 in that slot into
+    // Inf·0 = NaN
+    val inf = Double.PositiveInfinity
+    val frame = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)),
+        (2L, Array(inf, 1.0)), (3L, Array(0.6, 0.4)),
+        (4L, Array(0.2, 0.9)), (5L, Array(1.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val seeds = Array(Array(Array(1.0, 0.0), Array(0.0, 1.0)))
+    val Seq(local, dist) = bothExecutors(trainFrame(frame), m = 1, sub = 2)
+    // row 2 scores +inf on part 0 and NaN on part 1: NaN wins, the
+    // window's descending order
+    val first = assignments(local, seeds)
+    assert(first((2L, 0)) == 1, s"NaN did not outrank +inf: $first")
+    assert(first == assignments(dist, seeds))
+    val cbL = Similarity.lloyd(local, ks = 2, maxIter = 4, tol = 1e-9)
+    val cbD = Similarity.lloyd(dist, ks = 2, maxIter = 4, tol = 1e-9)
+    assert(sameCodebook(cbL, cbD, 1e-9),
+      s"${cbL.map(_.map(_.toSeq).toSeq).toSeq} vs " +
+        s"${cbD.map(_.map(_.toSeq).toSeq).toSeq}")
+    assert(assignments(local, cbL) == assignments(dist, cbD))
+  }
+
+  test("Lloyd executors: a duplicate id fails loudly with one message " +
+      "and pins nothing") {
+    val dup = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)),
+        (1L, Array(0.5, 0.5)), (2L, Array(1.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val msgs = bothExecutors(trainFrame(dup), m = 1, sub = 2).map(exec =>
+      intercept[IllegalArgumentException](
+        Similarity.lloyd(exec, ks = 2, maxIter = 3, tol = 1e-9)).getMessage)
+    assert(msgs.distinct.size == 1 && msgs.head.contains("duplicate id 1"),
+      msgs)
+    intercept[IllegalArgumentException](Similarity.pqTrain(dup, "vec_id",
+      "embedding", m = 1, ks = 2, trainSampleN = 0))
+    intercept[IllegalArgumentException](Similarity.kmeansFit(dup, "vec_id",
+      "embedding", k = 2))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  /** `rows` 1024-dim hashed (so incompressible) vectors: at this width
+    * 1024 rows fill the local training budget. */
+  private def wideFrame(rows: Int) = spark.range(rows).select(
+    col("id").as("vec_id"),
+    transform(sequence(lit(0), lit(1023)), i =>
+      hash(col("id"), i).cast("double") / lit(Int.MaxValue.toDouble))
+      .as("embedding"))
+
+  /** (serialized task-result bytes the driver receives, Spark jobs run)
+    * while `f` runs. */
+  private def resultBytesAndJobs(f: => Any): (Long, Int) = {
+    val sc = spark.sparkContext
+    val total = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) total.addAndGet(e.taskMetrics.resultSize)
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.ListenerBusProbe.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    (total.get, jobs.get)
+  }
+
+  test("executor choice: training rows x dim against the budget, not " +
+      "trainSampleN") {
+    import Similarity.{LocalTrainBudget, trainsLocally}
+    Seq(1, 64, 1024).foreach { dim =>
+      assert(trainsLocally(LocalTrainBudget / dim, dim))
+      assert(!trainsLocally(LocalTrainBudget / dim + 1, dim))
+    }
+    // the ANN builds' 4096-row samples at dim 64 train locally
+    assert(trainsLocally(4096, 64))
+    // an explicit sample above the budget trains distributed: the
+    // driver receives a small fraction of the rows × dim doubles a
+    // collect would ship
+    val wide = wideFrame(1100)
+    assert(!trainsLocally(1100, 1024))
+    val (shipped, _) = resultBytesAndJobs(Similarity.pqTrain(wide, "vec_id",
+      "embedding", m = 32, ks = 2, maxIter = 2, trainSampleN = 1100))
+    assert(shipped < 1100L * 1024 * 8 / 4,
+      s"$shipped result bytes: the training set was collected")
+    // a sample inside the budget is collected, in its one job: no count
+    // or dim probe runs before it
+    val (collected, jobs) = resultBytesAndJobs(Similarity.pqTrain(wide,
+      "vec_id", "embedding", m = 32, ks = 2, maxIter = 2,
+      trainSampleN = 512))
+    assert(collected >= 512L * 1024 * 8 / 2, s"$collected result bytes")
+    assert(jobs == 1, s"$jobs jobs for a sample that fits")
+  }
+
+  test("Lloyd training leaves nothing pinned, on either executor") {
+    val e = sf0001Embeddings
+    val wide = wideFrame(1100) // 1100 × 1024 doubles: distributed
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Similarity.pqTrain(e, "vec_id", "embedding", m = 8, ks = 8)
+    Similarity.kmeansFit(e, "vec_id", "embedding", k = 4, maxIter = 3)
+      .collect()
+    Similarity.pqTrain(wide, "vec_id", "embedding", m = 32, ks = 2,
+      maxIter = 2, trainSampleN = 0)
+    Similarity.kmeansFit(wide, "vec_id", "embedding", k = 2, maxIter = 2,
+      trainSampleN = 0).collect()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("LSH near-dup pairs == exact pairs restricted to shared buckets") {

@@ -9,4 +9,7 @@ import org.apache.spark.scheduler.SparkListenerInterface
 object ListenerBusProbe {
   def count[T <: SparkListenerInterface: ClassTag](sc: SparkContext): Int =
     sc.listenerBus.findListenersByClass[T]().size
+
+  /** Block until every event posted so far has reached its listeners. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
